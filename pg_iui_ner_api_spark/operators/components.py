@@ -15,15 +15,15 @@ algorithm OOM on big graphs), and convergence is detected by an edge-set
 checksum (count + sum of xxhash64), not a collect of the edges.
 
 Skew: hub components (a celebrity entity with 10^9 mentions) concentrate
-on the hub's min node. The star-edge *construction* in
-``canonical_components`` already avoids quadratic blowup (each mention
-connects only to its group minimum, never pairwise), and AQE skew-join
-splitting handles the remaining reduce-side skew.
+on the hub's min node. The block graph of ``canonical_components``
+already avoids quadratic blowup (a hub entity is one node, its mentions
+collapse into distinct entity↔surface edges, never pairwise), and AQE
+skew-join splitting handles the remaining reduce-side skew.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 
 def _edge_checksum(e: DataFrame) -> tuple[int, int]:
@@ -186,122 +186,60 @@ def incremental_components(assign: DataFrame, new_edges: DataFrame,
     return untouched.unionByName(sub.select("node", "component"))
 
 
+def block_pairs(linked_mentions: DataFrame) -> DataFrame:
+    """Distinct ``(entity_id, surface)`` pairs of the bipartite
+    entity↔surface block graph; ``surface`` is the lowercased mention
+    word. The corpus-sized mention table contributes only this
+    projection, bounded by |vocabulary| × |entities|."""
+    return linked_mentions.select(
+        "entity_id", F.lower("word").alias("surface")
+    ).distinct()
+
+
+def _entity_node() -> Column:
+    return F.xxhash64(F.concat(F.lit("e:"), F.col("entity_id")))
+
+
+def block_edges(pairs: DataFrame) -> DataFrame:
+    """Block-graph edges ``(u, v)`` of :func:`block_pairs` rows: 64-bit
+    hashed node ids, surfaces salted into an id space disjoint from
+    entities by a tag prefix."""
+    return pairs.select(
+        _entity_node().alias("u"),
+        F.xxhash64(F.concat(F.lit("s:"), F.col("surface"))).alias("v"),
+    )
+
+
+def entity_components(pairs: DataFrame, assign: DataFrame) -> DataFrame:
+    """``(entity_id, node, component)``: one row per entity of ``pairs``,
+    its component read from the block-graph ``(node, component)``
+    assignment ``assign``."""
+    return (
+        pairs.select("entity_id").distinct()
+        .withColumn("node", _entity_node())
+        .join(assign, "node", "left")
+        .select("entity_id", "node",
+                F.coalesce("component", "node").alias("component"))
+    )
+
+
 def canonical_components(linked_mentions: DataFrame) -> DataFrame:
-    """Mention-level canonicalization -> component per mention.
+    """Entity-level canonicalization -> component per linked entity.
 
     Two mentions co-refer iff they are connected through shared linked
     entity_ids and/or shared normalized surfaces. That relation factors
     through the **bipartite entity↔surface block graph**: mention m
     (entity e, surface s) connects e—s; components of mentions =
-    components of their entity nodes in that graph. So the corpus-sized
-    mention table contributes ONE distinct projection (entity_id,
-    surface) — at 10^12 documents this is bounded by |vocabulary| ×
-    |entities|, not by corpus size — and the iterative CC runs on a
-    dimension-sized graph. A hub entity with 10^9 mentions is exactly
-    one node here; skew never reaches the loop.
+    components of their entity nodes in that graph, so the component is
+    a function of the entity. At 10^12 documents the graph is still
+    dimension-sized (:func:`block_pairs`), and a hub entity with 10^9
+    mentions is exactly one node here; skew never reaches the loop.
 
-    Returns (mention_id, node, component, entity_id) with node/component
-    being stable 64-bit hashes of entity ids.
+    Returns ``(entity_id, node, component)``, one row per linked entity,
+    with node/component being stable 64-bit hashes of block-graph ids.
     """
-    m = linked_mentions.select(
-        "mention_id", "entity_id", F.lower("word").alias("surface")
-    )
-    # bipartite edges over hashed ids; surface ids salted into a disjoint
-    # id space from entity ids via a tag prefix
-    pairs = m.select("entity_id", "surface").distinct().localCheckpoint()
-    edges = pairs.select(
-        F.xxhash64(F.concat(F.lit("e:"), "entity_id")).alias("u"),
-        F.xxhash64(F.concat(F.lit("s:"), "surface")).alias("v"),
-    )
-    cc = connected_components(edges)
-    ent_comp = (
-        pairs.select("entity_id")
-        .distinct()
-        .withColumn("node", F.xxhash64(F.concat(F.lit("e:"), "entity_id")))
-        .join(cc, "node", "left")
-        .select(
-            "entity_id",
-            "node",
-            F.coalesce("component", "node").alias("component"),
-        )
-    )
-    return m.select("mention_id", "entity_id").join(
-        F.broadcast(ent_comp), "entity_id"
-    ).select("mention_id", "node", "component", "entity_id")
-
-
-def _modal(joined: DataFrame, col: str, alias: str) -> DataFrame:
-    """Per-component modal value of ``col`` with a DETERMINISTIC
-    tie-break: ``min(struct(-count, value))`` — the largest count wins,
-    ties go to the lexicographically smallest value. ``F.mode()`` breaks
-    ties by partition order, which made the canonicalization outputs
-    partitioning-dependent (r4 ADVICE); this is the same tie-break
-    :func:`fusion.entity_report` uses, so every vote in the repo agrees."""
-    counts = joined.groupBy("component", col).agg(F.count(F.lit(1)).alias("c"))
-    return counts.groupBy("component").agg(
-        F.min(F.struct((-F.col("c")).alias("nc"), F.col(col)))
-        .getField(col)
-        .alias(alias)
-    )
-
-
-def _component_entity_vote(
-    linked_mentions: DataFrame, components: DataFrame
-) -> DataFrame:
-    """Per-component representative entity ``(component, canonical_id,
-    n_mentions)`` — the single shared vote that BOTH
-    :func:`canonical_nodes` and :func:`entity_canonical_map` derive
-    from, so the node table and the edge-rewrite map agree by
-    construction even on tied components."""
-    lm = linked_mentions.select("mention_id", "entity_id")
-    joined = components.select("mention_id", "component").join(lm, "mention_id")
-    counts = joined.groupBy("component", "entity_id").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    return counts.groupBy("component").agg(
-        F.min(F.struct((-F.col("c")).alias("nc"), F.col("entity_id")))
-        .getField("entity_id")
-        .alias("canonical_id"),
-        F.sum("c").alias("n_mentions"),
-    )
-
-
-def canonical_nodes(linked_mentions: DataFrame, components: DataFrame) -> DataFrame:
-    """KG node table: one row per canonical entity cluster.
-
-    Representative entity = modal linked entity of the component;
-    canonical_name = modal canonical_name (A5 'canonical name vote').
-    All votes tie-break deterministically via ``min(struct(-count,
-    value))``; when several components share a representative entity,
-    the name/kind of the LARGEST component wins (ties again
-    lexicographic), so the output hash is stable across partitionings.
-    """
-    lm = linked_mentions.select("mention_id", "entity_id", "canonical_name", "link_kind")
-    joined = components.select("mention_id", "component").join(lm, "mention_id")
-    per_component = (
-        _component_entity_vote(linked_mentions, components)
-        .join(_modal(joined, "canonical_name", "canonical_name"), "component")
-        .join(_modal(joined, "link_kind", "kind"), "component")
-    )
-    return (
-        per_component.groupBy(F.col("canonical_id").alias("entity_id"))
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("n_mentions")).alias("nm"),
-                    F.col("canonical_name"),
-                    F.col("kind"),
-                )
-            ).alias("_w"),
-            F.sum("n_mentions").alias("n_mentions"),
-        )
-        .select(
-            "entity_id",
-            F.col("_w.canonical_name").alias("canonical_name"),
-            F.col("_w.kind").alias("kind"),
-            "n_mentions",
-        )
-    )
+    pairs = block_pairs(linked_mentions).localCheckpoint()
+    return entity_components(pairs, connected_components(block_edges(pairs)))
 
 
 def entity_vote_counts(linked_mentions: DataFrame) -> DataFrame:
@@ -316,58 +254,45 @@ def entity_vote_counts(linked_mentions: DataFrame) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def canonical_nodes_from_votes(
-    ent_votes: DataFrame, ent_comp: DataFrame
-) -> DataFrame:
-    """:func:`canonical_nodes` computed from pre-aggregated vote counts
-    (:func:`entity_vote_counts`) plus an ``(entity_id, component)`` map
-    instead of raw mentions. Exactly equal to ``canonical_nodes`` when
-    ``ent_comp`` is the per-entity component of
-    :func:`canonical_components` (component is a function of entity
-    there, so summing counts reproduces mention counts; same
-    deterministic tie-breaks) — pinned by
-    ``test_components.test_nodes_from_votes_match``. This is the
-    incremental compactor's node builder: every input here is
-    dimension-sized (entity vocabulary), never corpus-sized."""
-    v = ent_votes.join(ent_comp, "entity_id")
-    ec = v.groupBy("component", "entity_id").agg(F.sum("cnt").alias("c"))
-    rep = ec.groupBy("component").agg(
-        F.min(F.struct((-F.col("c")).alias("nc"), F.col("entity_id")))
-        .getField("entity_id")
-        .alias("canonical_id"),
+def _vote(ent_votes: DataFrame, ent_comp: DataFrame, col: str) -> DataFrame:
+    """``(component, <col>, n_mentions)``: the per-component modal value
+    of ``col`` over the additive vote counts, with a DETERMINISTIC
+    tie-break ``min(struct(-count, value))`` — the largest count wins,
+    ties go to the smallest value. ``F.mode()`` breaks ties by partition
+    order; this is the same tie-break :func:`fusion.entity_report` uses,
+    so every vote in the repo agrees."""
+    c = (
+        ent_votes.join(ent_comp.select("entity_id", "component"), "entity_id")
+        .groupBy("component", col).agg(F.sum("cnt").alias("c"))
+    )
+    return c.groupBy("component").agg(
+        F.min(F.struct((-F.col("c")).alias("nc"), F.col(col)))
+        .getField(col).alias(col),
         F.sum("c").alias("n_mentions"),
     )
 
-    def modal(col: str, alias: str) -> DataFrame:
-        counts = v.groupBy("component", col).agg(F.sum("cnt").alias("c"))
-        return counts.groupBy("component").agg(
-            F.min(F.struct((-F.col("c")).alias("nc"), F.col(col)))
-            .getField(col)
-            .alias(alias)
-        )
 
-    per_component = (
-        rep.join(modal("canonical_name", "canonical_name"), "component")
-        .join(modal("link_kind", "kind"), "component")
-    )
+def canonical_nodes(ent_votes: DataFrame, ent_comp: DataFrame) -> DataFrame:
+    """KG node table: one row per canonical entity cluster, built from
+    the vote counts of :func:`entity_vote_counts` and the
+    ``(entity_id, component)`` map of :func:`canonical_components`.
+
+    Representative entity = modal linked entity of the component;
+    canonical_name = modal canonical_name (A5 'canonical name vote');
+    kind = modal link_kind; n_mentions = the component's mention count.
+    Each entity lies in exactly one component, so representatives are
+    distinct across components. Every input is dimension-sized (entity
+    vocabulary), never corpus-sized, which is what lets the streaming
+    compactor fold a delta into accumulated votes.
+    """
     return (
-        per_component.groupBy(F.col("canonical_id").alias("entity_id"))
-        .agg(
-            F.min(
-                F.struct(
-                    (-F.col("n_mentions")).alias("nm"),
-                    F.col("canonical_name"),
-                    F.col("kind"),
-                )
-            ).alias("_w"),
-            F.sum("n_mentions").alias("n_mentions"),
-        )
-        .select(
-            "entity_id",
-            F.col("_w.canonical_name").alias("canonical_name"),
-            F.col("_w.kind").alias("kind"),
-            "n_mentions",
-        )
+        _vote(ent_votes, ent_comp, "entity_id")
+        .join(_vote(ent_votes, ent_comp, "canonical_name")
+              .drop("n_mentions"), "component")
+        .join(_vote(ent_votes, ent_comp, "link_kind")
+              .drop("n_mentions"), "component")
+        .select("entity_id", "canonical_name",
+                F.col("link_kind").alias("kind"), "n_mentions")
     )
 
 
@@ -375,29 +300,15 @@ def entity_canonical_map(
     linked_mentions: DataFrame, components: DataFrame
 ) -> DataFrame:
     """(entity_id, canonical_id): every linked entity mapped to its
-    component's representative — the SAME :func:`_component_entity_vote`
-    :func:`canonical_nodes` uses, so the map and the node table agree
-    by construction. Entities whose component representative is
-    themselves map to themselves. An entity split across components
-    (possible when its surfaces never co-occur) takes the modal
-    representative over its mentions (deterministic ``min(struct(-count,
-    canonical_id))`` tie-break). Dimension-sized output: bounded by the
-    entity vocabulary, never the corpus."""
-    lm = linked_mentions.select("mention_id", "entity_id")
-    joined = components.select("mention_id", "component").join(lm, "mention_id")
-    rep = _component_entity_vote(linked_mentions, components).select(
-        "component", "canonical_id"
-    )
-    counts = (
-        joined.join(rep, "component")
-        .groupBy("entity_id", "canonical_id")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return counts.groupBy("entity_id").agg(
-        F.min(F.struct((-F.col("c")).alias("nc"), F.col("canonical_id")))
-        .getField("canonical_id")
-        .alias("canonical_id")
-    )
+    component's representative — the SAME vote :func:`canonical_nodes`
+    takes, so the map and the node table agree by construction.
+    Representatives map to themselves. Dimension-sized output: bounded
+    by the entity vocabulary, never the corpus."""
+    rep = _vote(entity_vote_counts(linked_mentions), components, "entity_id")
+    return components.join(
+        rep.select("component", F.col("entity_id").alias("canonical_id")),
+        "component",
+    ).select("entity_id", "canonical_id")
 
 
 def canonical_edges(

@@ -438,10 +438,9 @@ def coherence_rerank(
     )
     c = c.join(keep_m, ["doc_id", "mention_id"], "left_semi").localCheckpoint()
 
+    e = edges.select("u", "v").where(F.col("u") != F.col("v"))
     sym = (
-        edges.select("u", "v")
-        .where(F.col("u") != F.col("v"))
-        .unionAll(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
     )
     a = c.select("doc_id", "mention_id", "entity_id")
@@ -589,13 +588,19 @@ def link_mentions_coherent(
         "doc_id", "mention_id", "entity_id",
         F.col("score").alias("coh_score"),
     )
-    return (
+    # an alias dictionary may list one (surface, entity) pair several
+    # times with different kind/name: keep the smallest (link_kind,
+    # canonical_name), never whichever row a partition sees first
+    cols = ["doc_id", "span_idx", "mention_id", "entity_group", "word",
+            "start", "end", "score", "sentence_id", "entity_id"]
+    w = (
         cands.join(win, ["doc_id", "mention_id", "entity_id"])
-        .dropDuplicates(["mention_id"])
-        .select(
-            "doc_id", "span_idx", "mention_id", "entity_group", "word",
-            "start", "end", "score", "sentence_id", "entity_id",
-            "link_kind", "canonical_name",
-            F.col("coh_score").alias("link_score"),
-        )
+        .groupBy("mention_id")
+        .agg(F.min(F.struct("link_kind", "canonical_name", "coh_score", *cols))
+             .alias("_w"))
+    )
+    return w.select(
+        *[F.col(f"_w.{c}").alias(c)
+          for c in cols + ["link_kind", "canonical_name"]],
+        F.col("_w.coh_score").alias("link_score"),
     )

@@ -2,7 +2,7 @@
 
     documents ──extract──> mentions + predicates      (1 corpus scan)
        mentions ──link──> linked_mentions             (broadcast joins)
-       linked  ──canonicalize──> components, nodes    (iterative CC)
+       linked  ──canonicalize──> components, nodes    (per-entity CC, votes)
        linked + predicates ──assemble──> edges        (co-keyed joins)
 
 Partitioning contract: one explicit doc_id hash partitioning
@@ -69,8 +69,10 @@ def run_kg_pipeline(
     )
     comps = runner.stage("components", lambda: C.canonical_components(linked),
                          persist=False)
-    nodes = runner.stage("nodes", lambda: C.canonical_nodes(linked, comps),
-                         persist=False, bucket_by="entity_id", n_buckets=n_part)
+    nodes = runner.stage(
+        "nodes", lambda: C.canonical_nodes(C.entity_vote_counts(linked), comps),
+        persist=False, bucket_by="entity_id", n_buckets=n_part,
+    )
     edges = runner.stage("edges", lambda: T.assemble_triples(linked, predicates),
                          persist=False, **bk)
     out = {}

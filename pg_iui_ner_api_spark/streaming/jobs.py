@@ -350,7 +350,7 @@ def compact_kg_nodes(
         (cost ∝ delta + touched components, never history);
       * ``votes``  — additive (entity, name, kind, cnt) counts
         (:func:`entity_vote_counts`); the node table is rebuilt from
-        these marginals (:func:`canonical_nodes_from_votes`) without
+        these marginals (:func:`canonical_nodes`) without
         touching any corpus-sized table.
 
     State versions are written to ``v=<high-water batch>`` dirs and the
@@ -358,7 +358,9 @@ def compact_kg_nodes(
     the previous consistent version. Output equals the batch pipeline's
     nodes over the same corpus (pinned by test_stream_kg), and a full
     rebuild (``incremental=False`` or no state) produces identical
-    state.
+    state. With no state to reuse and no linked batch under
+    ``workdir/linked_inc`` (missing or empty), raises ``ValueError``
+    before reading anything.
     """
     import json
     import os
@@ -370,7 +372,7 @@ def compact_kg_nodes(
     batch_ids = sorted(
         int(d.split("=", 1)[1]) for d in os.listdir(inc_dir)
         if d.startswith("batch=")
-    )
+    ) if os.path.isdir(inc_dir) else []
     state_dir = f"{workdir}/compact_state"
     meta_path = os.path.join(state_dir, "meta.json")
     meta = None
@@ -380,16 +382,17 @@ def compact_kg_nodes(
     new_ids = [b for b in batch_ids if meta is None or b > meta["last_batch"]]
     if meta is not None and not new_ids:
         return spark.read.parquet(f"{workdir}/nodes")
+    if not new_ids:
+        raise ValueError(
+            f"compact_kg_nodes: no linked batches to compact under "
+            f"{inc_dir}; run stream_kg_increment first"
+        )
 
     delta = spark.read.parquet(
         *[f"{inc_dir}/batch={b}" for b in new_ids]
     )
     dv = C.entity_vote_counts(delta)
-    dp = delta.select(
-        "entity_id", F.lower("word").alias("surface")
-    ).distinct()
-    e_node = F.xxhash64(F.concat(F.lit("e:"), F.col("entity_id")))
-    s_node = F.xxhash64(F.concat(F.lit("s:"), F.col("surface")))
+    dp = C.block_pairs(delta)
     if meta is not None:
         v = meta["version"]
         prev_votes = spark.read.parquet(f"{state_dir}/votes/v={v}")
@@ -402,24 +405,11 @@ def compact_kg_nodes(
         )
         new_pairs = dp.join(prev_pairs, ["entity_id", "surface"], "left_anti")
         pairs = prev_pairs.unionByName(new_pairs)
-        delta_edges = new_pairs.select(
-            e_node.alias("u"), s_node.alias("v")
-        )
-        assign = C.incremental_components(prev_assign, delta_edges)
+        assign = C.incremental_components(prev_assign, C.block_edges(new_pairs))
     else:
         votes, pairs = dv, dp
-        assign = C.connected_components(
-            dp.select(e_node.alias("u"), s_node.alias("v"))
-        )
-    ent_comp = (
-        pairs.select("entity_id").distinct()
-        .withColumn("node", e_node)
-        .join(assign, "node", "left")
-        .select(
-            "entity_id", F.coalesce("component", "node").alias("component")
-        )
-    )
-    nodes = C.canonical_nodes_from_votes(votes, ent_comp)
+        assign = C.connected_components(C.block_edges(dp))
+    nodes = C.canonical_nodes(votes, C.entity_components(pairs, assign))
 
     hwm = max(new_ids)
     for name, df in (("votes", votes), ("pairs", pairs), ("assign", assign)):

@@ -148,31 +148,45 @@ def test_component_stats_star_vs_sparse(spark):
     assert r["max_degree"] == 4 and r["density"] == 0.4
 
 
-def test_nodes_from_votes_match(spark):
-    """canonical_nodes_from_votes over additive vote counts + the
-    per-entity component map == canonical_nodes over raw mentions —
-    the equality the incremental compactor's node builder rests on."""
-    from pg_iui_ner_api_spark import synth
-    from pg_iui_ner_api_spark.operators import linking as L, ner as N
+def test_canonical_nodes_hand_built_votes(spark):
+    """Node table and entity map over a hand-built linked-mentions frame
+    with hand-written expected rows: a tied entity vote (smaller
+    entity_id wins), a tied name vote (smaller name wins), a component
+    joined only through a shared surface, and n_mentions summed over
+    the component."""
     from pg_iui_ner_api_spark.operators.components import (
         canonical_components,
         canonical_nodes,
-        canonical_nodes_from_votes,
+        entity_canonical_map,
         entity_vote_counts,
     )
 
-    docs = synth.synth_documents(spark, 120, partitions=4)
-    lm = L.link_mentions(
-        N.mentions_of(N.extract(docs)), synth.alias_df(spark),
-        synth.entity_emb_df(spark),
-    )
+    lm = spark.createDataFrame(
+        [
+            # Q1/Q2 share only the surface "acme": tied entity and name votes
+            (1, "Q2", "Acme", "Acme Corp", "ORG"),
+            (2, "Q1", "ACME", "Acme Inc", "ORG"),
+            # Q4/Q5 share "paname"; Q5 outvotes Q4; tied "Paris" vs
+            # "City of Paris" name vote; kind LOC 4 vs GPE 1
+            (3, "Q5", "Paris", "Paris", "LOC"),
+            (4, "Q5", "Paris", "City of Paris", "LOC"),
+            (5, "Q5", "Paname", "Paris", "GPE"),
+            (6, "Q5", "Paname", "City of Paris", "LOC"),
+            (7, "Q4", "paname", "Paname", "LOC"),
+            (8, "Q9", "Bob", "Bob", "PER"),
+        ],
+        "mention_id long, entity_id string, word string, "
+        "canonical_name string, link_kind string",
+    ).repartition(3)
     comps = canonical_components(lm)
-    want = {tuple(r) for r in canonical_nodes(lm, comps).collect()}
-    ent_comp = comps.select("entity_id", "component").distinct()
-    got = {
-        tuple(r)
-        for r in canonical_nodes_from_votes(
-            entity_vote_counts(lm), ent_comp
-        ).collect()
-    }
-    assert got == want
+    assert comps.columns == ["entity_id", "node", "component"]
+    assert comps.count() == 5
+    nodes = canonical_nodes(entity_vote_counts(lm), comps)
+    assert sorted(tuple(r) for r in nodes.collect()) == [
+        ("Q1", "Acme Corp", "ORG", 2),
+        ("Q5", "City of Paris", "LOC", 5),
+        ("Q9", "Bob", "PER", 1),
+    ]
+    got = {r.entity_id: r.canonical_id
+           for r in entity_canonical_map(lm, comps).collect()}
+    assert got == {"Q1": "Q1", "Q2": "Q1", "Q4": "Q5", "Q5": "Q5", "Q9": "Q9"}

@@ -187,6 +187,25 @@ def test_coherence_rerank_distinct_mention_votes(spark):
     assert got[1] == 1
 
 
+def test_coherence_rerank_ignores_self_loops(spark):
+    """A self-loop edge relates no two distinct entities, so it must
+    not change any score (through either orientation)."""
+    from pg_iui_ner_api_spark.operators.linking import coherence_rerank
+
+    cands = spark.createDataFrame(
+        [("d1", 1, 10, 0.5), ("d1", 1, 20, 0.6), ("d1", 2, 10, 0.4)],
+        ["doc_id", "mention_id", "entity_id", "prior"],
+    )
+
+    def run(edges):
+        e = spark.createDataFrame(edges, "u long, v long")
+        return sorted(tuple(r) for r in coherence_rerank(cands, e).collect())
+
+    assert run([(10, 10)]) == run([]) == [
+        ("d1", 1, 20, 0.6, 0, 0.6), ("d1", 2, 10, 0.4, 0, 0.4),
+    ]
+
+
 def test_coherence_rerank_caps_and_dropped_report(spark):
     """The candidate cap keeps the top-prior candidates (deterministic
     order) and the companion report counts exactly what fell."""
@@ -262,3 +281,30 @@ def test_coherent_linking_drop_in_parity(spark):
     r = tp / max(len(want), 1)
     assert p >= 0.95, f"coherent precision {p:.4f} < 0.95"
     assert r >= 0.95, f"coherent recall {r:.4f} < 0.95"
+
+
+def test_coherent_linking_duplicate_alias_is_deterministic(spark):
+    """An alias dictionary listing one (surface, entity) pair twice with
+    different canonical names gives every mention the row with the
+    smaller (link_kind, canonical_name), under 1 and 4 input
+    partitions alike."""
+    from pg_iui_ner_api_spark.operators.linking import link_mentions_coherent
+
+    docs = synth.synth_documents(spark, 60, partitions=2)
+    m = ner.mentions_of(ner.extract(docs)).cache()
+    alias = synth.alias_df(spark)
+    dup = alias.where(F.col("alias") == "Paris").withColumn(
+        "canonical_name", F.lit("City of Paris")
+    )
+    alias = alias.unionByName(dup)
+    embs = synth.entity_emb_df(spark)
+
+    def run(n):
+        out = link_mentions_coherent(m.repartition(n), alias, embs)
+        return sorted(tuple(r) for r in out.collect())
+
+    one, four = run(1), run(4)
+    assert one == four
+    paris = [r for r in one if r[9] == "LOC:paris"]
+    assert paris and all(r[11] == "City of Paris" for r in paris)
+    m.unpersist()

@@ -295,6 +295,18 @@ def test_stream_kg_increment_matches_batch(spark, tmp_path):
     res["_runner"].unpersist()
 
 
+def test_compact_kg_nodes_without_batches_raises(spark, tmp_path):
+    """No compaction state and no linked batch (missing or empty
+    linked_inc) is a clear ValueError, not a listdir or zero-path read
+    error."""
+    wd = tmp_path / "wd"
+    with pytest.raises(ValueError, match="no linked batches"):
+        J.compact_kg_nodes(spark, str(wd))
+    (wd / "linked_inc").mkdir(parents=True)
+    with pytest.raises(ValueError, match="no linked batches"):
+        J.compact_kg_nodes(spark, str(wd))
+
+
 def test_stream_dedup_exact_across_batches(spark, tmp_path):
     """A duplicate arriving in a LATER micro-batch must still be dropped
     (state store carries the seen digests across triggers), and the
