@@ -102,8 +102,9 @@ def _kg_audit(res: dict) -> dict:
 
 
 def main(argv: list[str] | None = None, spark=None) -> dict:
-    """Run the pipeline; returns {stage: row_count} (also printed as one
-    JSON line so schedulers can scrape it)."""
+    """Run the pipeline; returns the run summary, whose ``counts`` maps
+    each output to its row count (also printed as one JSON line so
+    schedulers can scrape it)."""
     args = build_parser().parse_args(argv)
 
     if spark is None:
@@ -135,8 +136,12 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
         input_fingerprint=fingerprint,
         doc_partitions=args.doc_partitions,
     )
+    # stage row counts come from the runner's record of the files it
+    # wrote or resumed; only the views (mentions, predicates) are counted
+    events = res["_runner"].events
+    rows = {e["stage"]: e["rows_out"] for e in events}
     counts = {
-        name: df.count()
+        name: rows[name] if name in rows else df.count()
         for name, df in res.items()
         if not name.startswith("_")
     }
@@ -145,7 +150,7 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
         "workdir": args.workdir,
         "fingerprint": fingerprint,
         "counts": counts,
-        "stages": list(getattr(res.get("_runner"), "events", [])),
+        "stages": list(events),
     }
     if args.audit:
         summary["audit"] = _kg_audit(res)

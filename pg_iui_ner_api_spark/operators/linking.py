@@ -1,23 +1,22 @@
 """Entity linking: candidate generation + embedding rerank (SURVEY.md J3/M5).
 
-Stage shape:
+Stage shape (map-only, no shuffle):
 
-    mentions  ⋈ broadcast(alias_dict)  on lower(word)=lower(alias)   # J3
+    mentions  ⋈ broadcast(candidates per lower(alias))             # J3
       emb_sim = cosine(encode(ctx), entity_emb)   # Arrow-batched
                 vectorized pandas UDF; entity matrix held per worker
       score   = 0.7*emb_sim + 0.3*prior
-      links   = argmax per mention (max_by)     # one shuffle on mention_id
+      link    = array_max over the scored candidates (entity_id tie-break)
 
 Scale properties:
 
   * The alias dictionary and entity-embedding table are small dimensions
     (≤ millions of rows in production): both join broadcast, so the
     100 TB mention table never shuffles here.
-  * Only a narrow (mention_id, word, ctx) projection flows through the
-    candidate join and the per-mention argmax; the fat mention row is
-    joined back once at the end. No embedding vector is ever shuffled
-    or Arrow-transferred — the stand-in encoder is Column algebra, and
-    a real transformer encoder would slot in as an Arrow-batched
+  * Each mention row scores its candidate array in-row and drops ``ctx``
+    on the way out. No embedding vector is ever shuffled or
+    Arrow-transferred — the stand-in encoder is a BoW over the context,
+    and a real transformer encoder would slot in as an Arrow-batched
     scalar-iterator pandas UDF at the same seam (per-worker model
     singleton, cf. operators/tagger.HFTagger).
   * AQE skew-join splitting covers hub surfaces ('Acme') in the
@@ -74,14 +73,12 @@ def _bow_count_matrix(ctx_list, vocab, V):
 
 
 def _entity_matrix(emb_map):
-    """(id -> column index, n_e x V matrix) from the broadcast dict;
-    deterministic column order."""
+    """n_e x V matrix from the broadcast dict, one row per entity in
+    sorted id order."""
     import numpy as np
 
     ids = sorted(emb_map)
-    col = {e: i for i, e in enumerate(ids)}
-    mat = np.stack([emb_map[e] for e in ids]) if ids else np.zeros((0, 1))
-    return col, mat
+    return np.stack([emb_map[e] for e in ids]) if ids else np.zeros((0, 1))
 
 
 def _cosine_rows(C, norms, emb_mat, rows_flat, eidx_flat):
@@ -170,78 +167,6 @@ def fuzzy_candidates(mentions: DataFrame, alias_df: DataFrame,
     return exact.unionByName(fuzzy.select(*exact.columns))
 
 
-def rerank(cands: DataFrame, entity_emb_df: DataFrame) -> DataFrame:
-    """Dense rerank (M5): cosine(encode(ctx), entity_emb) as an
-    Arrow-batched scalar pandas UDF — the north_star's prescribed shape
-    ("dense-embedding rerank ... in Arrow batches").
-
-    Why not pure Column algebra: the BoW cosine over the context tokens
-    was first built with JVM higher-order functions, but Catalyst
-    inlines projected subexpressions into every lambda reference
-    (CollapseProject has no common-subexpression elimination), so the
-    tokenizer re-ran per aggregate element — measured ~20 µs/row
-    interpreted. The vectorized numpy path runs ~2-4 µs/row and ships
-    only (ctx, entity_id) through Arrow; the entity-embedding matrix is
-    held per worker (a dim — at production scale it ships via
-    SparkFiles/broadcast exactly like the NER model, S4/S5).
-    """
-    import numpy as np
-
-    # L2-normalize entity embeddings up front so the UDF's dot/||ctx|| is a
-    # true cosine even if a real encoder hands us un-normalized vectors
-    # (the synth dim is already unit-norm, so scores are unchanged there).
-    emb_map = {}
-    for r in entity_emb_df.collect():
-        v = np.asarray(r["emb"], dtype=np.float64)
-        emb_map[r["entity_id"]] = v / (np.linalg.norm(v) or 1.0)
-    # Ship the dim via a Spark broadcast variable (one torrent transfer per
-    # executor) instead of closure capture (re-pickled into every task) —
-    # this is the code path the 100 TB story claims.
-    bc_emb = entity_emb_df.sparkSession.sparkContext.broadcast(emb_map)
-    vocab = dict(VOCAB)
-    holder: dict = {}  # per-worker (entity column map, matrix) cache
-
-    @F.pandas_udf("double")
-    def bow_cos(ctx: pd.Series, eid: pd.Series) -> pd.Series:
-        import numpy as np
-
-        if "col" not in holder:
-            holder["col"], holder["mat"] = _entity_matrix(bc_emb.value)
-        col, mat = holder["col"], holder["mat"]
-        V = mat.shape[1]
-        C, norms, inv = _bow_count_matrix(ctx.tolist(), vocab, V)
-        eidx = np.fromiter(
-            (col.get(e, -1) for e in eid.tolist()), np.int64, count=len(eid)
-        )
-        sims = _cosine_rows(C, norms, mat, inv, eidx)
-        return pd.Series(sims)
-
-    return (
-        cands.withColumn("emb_sim", bow_cos("ctx", "entity_id"))
-        .withColumn("link_score", 0.7 * F.col("emb_sim") + 0.3 * F.col("prior"))
-    )
-
-
-def links(scored: DataFrame, carry_cols: list[str] | None = None) -> DataFrame:
-    """Top-1 candidate per mention. Single shuffle on mention_id; ties break
-    deterministically on entity_id so reruns are byte-identical.
-
-    ``carry_cols`` ride along inside the argmax struct (identical for
-    every candidate of a mention), which is what lets link_mentions skip
-    a join-back shuffle entirely.
-    """
-    fields = [
-        F.col("entity_id"),
-        F.col("kind").alias("link_kind"),
-        F.col("canonical_name"),
-        F.col("link_score"),
-    ] + [F.col(c) for c in (carry_cols or [])]
-    best = F.max_by(
-        F.struct(*fields), F.struct(F.col("link_score"), F.col("entity_id"))
-    ).alias("best")
-    return scored.groupBy("mention_id").agg(best).select("mention_id", "best.*")
-
-
 def _with_scored(
     mentions: DataFrame, alias_df: DataFrame, entity_emb_df: DataFrame
 ) -> DataFrame:
@@ -282,14 +207,14 @@ def _with_scored(
         )
     )
     vocab = dict(VOCAB)
-    holder: dict = {}  # per-worker (entity column map, matrix) cache
+    holder: dict = {}  # per-worker entity matrix cache
 
     @F.pandas_udf("array<double>")
     def bow_cos_multi(ctx: pd.Series, eidxs: pd.Series) -> pd.Series:
         import numpy as np
 
         if "mat" not in holder:
-            _, holder["mat"] = _entity_matrix(bc_emb.value)
+            holder["mat"] = _entity_matrix(bc_emb.value)
         mat = holder["mat"]
         V = mat.shape[1]
         es_list = eidxs.tolist()

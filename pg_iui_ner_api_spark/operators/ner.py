@@ -74,7 +74,7 @@ def extract(documents: DataFrame, tagger: GazetteerTagger | None = None) -> Data
     def extract_batch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         tg = tagger or GazetteerTagger()
         for pdf in batches:
-            out = tag_frame(tg, pdf)
+            out = tg.tag_batch(pdf)
             if out is not None:
                 yield out
             # skip empty frames (historically an all-object empty frame
@@ -82,51 +82,6 @@ def extract(documents: DataFrame, tagger: GazetteerTagger | None = None) -> Data
             # string now but the guard stays — it is also cheaper).
 
     return text_spans.mapInPandas(extract_batch, schema=S.EXTRACTION)
-
-
-def tag_frame(tg, pdf: "pd.DataFrame") -> "pd.DataFrame | None":
-    """One Arrow batch -> EXTRACTION frame (or None when empty).
-
-    Vectorized via ``tag_batch`` (one regex pass + numpy row mapping —
-    zero per-row Python) when the tagger provides it; per-row ``tag``
-    loop otherwise (HFTagger, whose cost is the model forward). Both
-    paths emit identical rows in identical order (pinned by
-    test_span_parity's batch-parity test)."""
-    import pandas as pd
-
-    if hasattr(tg, "tag_batch"):
-        return tg.tag_batch(pdf)
-    out = {k: [] for k in (
-        "doc_id", "span_idx", "row_kind", "entity_group", "word",
-        "start", "end", "score", "sentence_id", "ctx",
-    )}
-    for doc_id, span_idx, text in zip(
-        pdf["doc_id"].to_numpy(), pdf["span_idx"].to_numpy(), pdf["text"].to_numpy()
-    ):
-        mentions, preds = tg.tag(text)
-        for m in mentions:
-            out["doc_id"].append(doc_id)
-            out["span_idx"].append(span_idx)
-            out["row_kind"].append("mention")
-            out["entity_group"].append(m.entity_group)
-            out["word"].append(m.word)
-            out["start"].append(m.start)
-            out["end"].append(m.end)
-            out["score"].append(m.score)
-            out["sentence_id"].append(m.sentence_id)
-            out["ctx"].append(m.ctx)
-        for p in preds:
-            out["doc_id"].append(doc_id)
-            out["span_idx"].append(span_idx)
-            out["row_kind"].append("pred")
-            out["entity_group"].append(None)
-            out["word"].append(p.pred)
-            out["start"].append(p.start)
-            out["end"].append(p.end)
-            out["score"].append(None)
-            out["sentence_id"].append(p.sentence_id)
-            out["ctx"].append(None)
-    return pd.DataFrame(out) if out["doc_id"] else None
 
 
 def mentions_of(extraction: DataFrame) -> DataFrame:

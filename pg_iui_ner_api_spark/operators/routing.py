@@ -113,8 +113,6 @@ def extract_routed(
     def extract_batch(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
-        from .ner import tag_frame
-
         taggers: dict[str, GazetteerTagger] = {}
         for pdf in batches:
             # one sub-batch per model (groupby preserves first-appearance
@@ -126,7 +124,7 @@ def extract_routed(
                 tg = taggers.get(path)
                 if tg is None:
                     tg = taggers[path] = factory(path)
-                out = tag_frame(tg, sub.reset_index(drop=True))
+                out = tg.tag_batch(sub.reset_index(drop=True))
                 if out is not None:
                     frames.append(out)
             if frames:

@@ -405,8 +405,7 @@ class HFTagger:
     def tag_batch(self, pdf, max_batch_tokens: int = 8192):
         """One Arrow batch -> EXTRACTION pandas frame: MANY text spans
         per model forward (SURVEY §2.8 M3 "batching"; r4 VERDICT #3 —
-        without this, ``tag_frame`` fell back to its per-row loop and
-        the HF path paid one forward per span).
+        without it the HF path paid one forward per span).
 
         Batching strategy: rows are length-SORTED then packed into
         micro-batches under a token budget (``batch_rows x padded_len <=

@@ -11,6 +11,13 @@ materialization:
   workdir/_lineage/<stage>.json   {run_id, stage, wall_ms, rows_out,
                                    per-file row counts, input_fingerprint}
 
+``partitions`` (one ``{file, rows}`` entry per non-empty part file) and
+``rows_out`` (their sum) are read from the parquet footers of the files
+the stage wrote, so counting a stage costs no Spark job and no pass
+over its rows. A resumed stage counts its files on disk the same way
+(never copying the manifest), so its event's ``rows_out`` reflects the
+data it actually reloads.
+
 Resume: a stage whose _SUCCESS exists and whose recorded
 input_fingerprint matches is loaded, not recomputed. Fingerprints are
 content-derived (caller-supplied, e.g. corpus size + seed), never
@@ -24,6 +31,26 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+
+def file_row_counts(out: str) -> list[dict]:
+    """``[{file, rows}]`` for every non-empty parquet part file under
+    ``out``, from the footers alone. Walks subdirectories (``partition_by``
+    writes ``<col>=<value>/`` dirs) and skips ``_``/``.`` entries, which
+    Spark's readers skip too (``_SUCCESS``, ``.crc`` checksums,
+    ``_temporary``)."""
+    import pyarrow.parquet as pq
+
+    parts = []
+    for root, dirs, files in os.walk(out):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.startswith(("_", ".")):
+                continue
+            rows = pq.read_metadata(os.path.join(root, f)).num_rows
+            if rows:
+                parts.append({"file": f, "rows": rows})
+    return parts
 
 
 class StageRunner:
@@ -130,7 +157,9 @@ class StageRunner:
 
         out, manifest = self._paths(name)
         if self._completed(name, bucket_by, n_buckets):
-            self.events.append({"stage": name, "action": "resumed"})
+            rows_out = sum(p["rows"] for p in file_row_counts(out))
+            self.events.append({"stage": name, "action": "resumed",
+                                "rows_out": rows_out})
             if bucket_by:
                 return self._register_bucketed(name, out, bucket_by, n_buckets)
             return self.spark.read.parquet(out)
@@ -162,14 +191,8 @@ class StageRunner:
         wall_ms = int((time.monotonic() - t0) * 1000)
 
         # per-partition (= per output file) lineage metrics
-        reread = (self.spark.table(self._table_name(name)) if bucket_by
-                  else self.spark.read.parquet(out))
-        per_file = (
-            reread.groupBy(F.input_file_name().alias("file"))
-            .count()
-            .collect()
-        )
-        rows_out = sum(r["count"] for r in per_file)
+        partitions = file_row_counts(out)
+        rows_out = sum(p["rows"] for p in partitions)
         os.makedirs(os.path.dirname(manifest), exist_ok=True)
         meta = {
             "run_id": self.run_id,
@@ -179,9 +202,7 @@ class StageRunner:
             "n_buckets": n_buckets if bucket_by else None,
             "wall_ms": wall_ms,
             "rows_out": rows_out,
-            "partitions": [
-                {"file": os.path.basename(r["file"]), "rows": r["count"]} for r in per_file
-            ],
+            "partitions": partitions,
         }
         tmp = manifest + ".tmp"
         with open(tmp, "w") as f:
@@ -189,4 +210,6 @@ class StageRunner:
         os.replace(tmp, manifest)  # atomic: manifest present => stage complete
         self.events.append({"stage": name, "action": "computed", "rows_out": rows_out,
                             "wall_ms": wall_ms})
-        return reread
+        if bucket_by:
+            return self.spark.table(self._table_name(name))
+        return self.spark.read.parquet(out)

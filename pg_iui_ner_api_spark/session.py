@@ -56,7 +56,7 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so the same entrypoints serve pytest, bench.py and spark-submit; on a
+    so the same entrypoints serve pytest, perfbench and spark-submit; on a
     real cluster the caller simply omits ``master`` and lets
     spark-submit supply it.
     """

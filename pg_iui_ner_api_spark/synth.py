@@ -5,8 +5,8 @@ The BASELINE.json input_hint mandates a corpus of shape
 No external data is allowed, so this module synthesizes it: seeded,
 wall-clock-free, and **a pure function of the doc index** — doc ``i`` is
 byte-identical no matter the partitioning, scale factor, or parallelism.
-That property is what makes the two-parallelism scaling bench (local[8]
-vs local[32] on the same input) and the kill/resume test meaningful.
+That property is what makes the 1-CPU vs 4-CPU benchmark legs (same
+input at two parallelisms) and the kill/resume test meaningful.
 
 Text spans are built from templates over a fixed gazetteer
 (PER/ORG/LOC/MISC — the reference's 4 entity kinds,

@@ -39,6 +39,11 @@ def test_main_synth_and_resume(spark, tmp_path, capsys):
     assert json.loads(line)["counts"] == {
         k: v for k, v in s1["counts"].items()
     }
+    # every stage's count is the row count of the files it wrote
+    stages = [e["stage"] for e in s1["stages"]]
+    assert set(s1["counts"]) == set(stages) | {"mentions", "predicates"}
+    for stage in stages:
+        assert s1["counts"][stage] == spark.read.parquet(f"{wd}/{stage}").count()
     # second run, same workdir + fingerprint: every stage resumes
     s2 = main(["--synth", "120", "--workdir", wd, "--run-id", "t1"], spark=spark)
     assert s2["counts"] == s1["counts"]

@@ -282,8 +282,6 @@ def test_hf_tag_batch_matches_per_row(hf_tagger):
     the per-row tag loop emits, in the same order."""
     import pandas as pd
 
-    from pg_iui_ner_api_spark.operators.ner import tag_frame
-
     fx = _fixture_set()
     tg = hf_tagger("models/fake-batch", fx)
     texts = list(fx)
@@ -293,7 +291,7 @@ def test_hf_tag_batch_matches_per_row(hf_tagger):
         "text": texts,
     })
     got = tg.tag_batch(pdf)
-    # reference: the per-row loop tag_frame used before tag_batch existed
+    # reference: the per-row tag loop
     per_row = {k: [] for k in got.columns}
     for doc_id, span_idx, text in zip(pdf["doc_id"], pdf["span_idx"], pdf["text"]):
         mentions, _ = tg.tag(text)
@@ -312,9 +310,6 @@ def test_hf_tag_batch_matches_per_row(hf_tagger):
     pd.testing.assert_frame_equal(got.reset_index(drop=True), want)
     # sanity on content: ORG+PER from t1, LOC from t3, PER from t4
     assert list(got["entity_group"]) == ["ORG", "PER", "LOC", "PER"]
-    # tag_frame now routes HFTagger through tag_batch
-    via_frame = tag_frame(tg, pdf)
-    pd.testing.assert_frame_equal(via_frame.reset_index(drop=True), want)
 
 
 def test_hf_tag_batch_token_budget(hf_tagger):

@@ -66,10 +66,13 @@ def test_rerank_is_arrow_vectorized(spark):
     assert plan.count("ArrowEvalPython") == 1
 
 
-def test_decomposed_api_matches_map_only_path(spark):
-    """candidates() + rerank() + links() (the decomposed round-1 API,
-    kept public) must agree with the map-only link_mentions on
-    (mention_id -> entity_id, link_score)."""
+def test_link_mentions_matches_independent_score(spark):
+    """Every linked mention's (entity_id, link_score) equals the score
+    computed here straight from the synth dimensions: 0.7 * cosine(BoW of
+    the mention's context, entity embedding) + 0.3 * alias prior, argmax
+    over the surface's holders with the larger entity_id winning ties."""
+    import numpy as np
+
     texts = [
         "Hopper works for Phoenix, the company.",
         "Acme Corp, the company, is located in Phoenix.",
@@ -86,19 +89,36 @@ def test_decomposed_api_matches_map_only_path(spark):
         schema=__import__("pg_iui_ner_api_spark.schema", fromlist=["DOCUMENTS"]).DOCUMENTS,
     )
     mentions = ner.mentions_of(ner.extract(docs))
-    alias, embs = synth.alias_df(spark), synth.entity_emb_df(spark)
-    fused = {
-        r["mention_id"]: (r["entity_id"], round(r["link_score"], 9))
-        for r in linking.link_mentions(mentions, alias, embs).collect()
+    linked = {
+        r["mention_id"]: r
+        for r in linking.link_mentions(
+            mentions, synth.alias_df(spark), synth.entity_emb_df(spark)
+        ).collect()
     }
-    scored = linking.rerank(
-        linking.candidates(mentions.select("mention_id", "word", "ctx"), alias), embs
-    )
-    decomposed = {
-        r["mention_id"]: (r["entity_id"], round(r["link_score"], 9))
-        for r in linking.links(scored).collect()
-    }
-    assert fused == decomposed and fused
+    embs = {e: np.asarray(v, np.float64) for e, v in synth.entity_embeddings()}
+    holders = {}
+    for alias, eid, _kind, _name, prior in synth.alias_table():
+        holders.setdefault(alias.lower(), []).append((eid, prior))
+
+    def cos(a, b):
+        na, nb = np.linalg.norm(a), np.linalg.norm(b)
+        return float(a @ b / (na * nb)) if na and nb else 0.0
+
+    n_checked = 0
+    for m in mentions.select("mention_id", "word", "ctx").collect():
+        cands = holders.get(m["word"].lower())
+        if not cands:
+            assert m["mention_id"] not in linked
+            continue
+        ctx = synth.embed_text(m["ctx"]).astype(np.float64)
+        score, eid = max(
+            (0.7 * cos(ctx, embs[e]) + 0.3 * prior, e) for e, prior in cands
+        )
+        got = linked[m["mention_id"]]
+        assert got["entity_id"] == eid, (m["word"], m["ctx"])
+        assert abs(got["link_score"] - score) <= 1e-6, (m["word"], got["link_score"], score)
+        n_checked += 1
+    assert n_checked == len(linked) >= 6
 
 
 def test_fuzzy_candidates_recover_typo_surfaces(spark):
