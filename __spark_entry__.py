@@ -442,6 +442,17 @@ def _url_raw_col():
     return F.concat(scheme, F.lit("://"), host, port, F.lit("/d/"), k, query, frag)
 
 
+def _list_str(col: str, fmt: str | None = None):
+    """A list column as one comma-joined string (elements formatted
+    with printf-style ``fmt`` when given): the comparable scalar form of
+    list outputs, which the correctness gate cannot hash. The DuckDB
+    twins build the same string with ``array_to_string``/``printf``."""
+    c = F.col(col)
+    if fmt is not None:
+        c = F.transform(c, lambda x: F.format_string(fmt, x))
+    return F.array_join(c.cast("array<string>"), ",")
+
+
 def _q_tfidf(spark, sf):
     """Per-doc top-3 tf-idf keywords (operators/search.py::
     tfidf_keywords) over the documents corpus."""
@@ -498,7 +509,8 @@ def _q_inverted_index(spark, sf):
     n_dropped truncation report."""
     from pg_iui_ner_api_spark.operators.search import build_inverted_index
 
-    return build_inverted_index(spread(_t(spark, sf, "documents")), max_postings=10)
+    idx = build_inverted_index(spread(_t(spark, sf, "documents")), max_postings=10)
+    return idx.withColumn("postings", _list_str("postings"))
 
 
 def _q_mad_outliers(spark, sf):
@@ -1100,7 +1112,8 @@ def _q_media_frame_plan(spark, sf):
     materialize — every 8th frame, pure column algebra over the
     md5-deterministic n_frames geometry."""
     feats = M.extract_media_features(_docs_with_media(spark, sf))
-    return M.frame_sample_plan(feats, every_n=8)
+    plan = M.frame_sample_plan(feats, every_n=8)
+    return plan.withColumn("sampled_frames", _list_str("sampled_frames"))
 
 
 def _q_media_geometry(spark, sf):
@@ -2091,9 +2104,10 @@ def _q_jl_project(spark, sf):
     """Johnson-Lindenstrauss ±1 sign projection 64 -> 8 dims
     (operators/ann.py::jl_project): plan-literal sign matrix, explicit
     left-associated double sums, map-only."""
-    return ANN.jl_project(
+    proj = ANN.jl_project(
         _t(spark, sf, "embeddings"), in_dim=64, out_dim=8
     )
+    return proj.withColumn("projected", _list_str("projected", "%.6f"))
 
 
 def _q_kg_paths(spark, sf):
@@ -3035,10 +3049,10 @@ def oracle_sql() -> dict[str, str]:
     # integer arithmetic, so the window twin hashes identically
     sql["bin_pack"] = """
         SELECT lang, doc_id, n_chars,
-               COALESCE(sum(n_chars) OVER (
+               COALESCE(CAST(sum(n_chars) OVER (
                  PARTITION BY lang ORDER BY doc_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                 // 2000 AS bin,
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                 AS BIGINT), 0) // 2000 AS bin,
                n_chars >= 2000 AS oversize
         FROM documents
         WHERE n_chars IS NOT NULL AND n_chars >= 0
@@ -3046,15 +3060,16 @@ def oracle_sql() -> dict[str, str]:
     sql["bin_pack_manifest"] = """
         WITH p AS (
           SELECT lang, doc_id, n_chars,
-                 COALESCE(sum(n_chars) OVER (
+                 COALESCE(CAST(sum(n_chars) OVER (
                    PARTITION BY lang ORDER BY doc_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                   // 2000 AS bin,
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                   AS BIGINT), 0) // 2000 AS bin,
                  n_chars >= 2000 AS oversize
           FROM documents
           WHERE n_chars IS NOT NULL AND n_chars >= 0
         )
-        SELECT lang, bin, count(*) AS n_files, sum(n_chars) AS total_bytes,
+        SELECT lang, bin, count(*) AS n_files,
+               CAST(sum(n_chars) AS BIGINT) AS total_bytes,
                max(oversize) AS has_oversize
         FROM p GROUP BY lang, bin
     """
@@ -3453,7 +3468,8 @@ def oracle_sql() -> dict[str, str]:
     sql["media_frame_plan"] = f"""
         {_MEDIA_GEO}
         SELECT doc_id, span_idx, media_ref,
-               list_filter(range(0, n_frames), i -> i % 8 = 0)
+               array_to_string(list_filter(range(0, n_frames),
+                                           i -> i % 8 = 0), ',')
                  AS sampled_frames
         FROM geo WHERE kind <> 'image'
     """
@@ -4791,7 +4807,7 @@ def oracle_sql() -> dict[str, str]:
               FROM h),
         m AS (SELECT source, idx, max(rho) AS rho FROM r GROUP BY source, idx),
         a AS (SELECT source, count(*) AS nnz,
-                     sum(1::BIGINT << (50 - rho)) AS s_set
+                     CAST(sum(1::BIGINT << (50 - rho)) AS BIGINT) AS s_set
               FROM m GROUP BY source)
         SELECT source, nnz, 4096 - nnz AS zeros,
                s_set + (4096 - nnz) * (1::BIGINT << 50) AS s50,
@@ -4916,7 +4932,8 @@ def oracle_sql() -> dict[str, str]:
                                         ORDER BY doc_id) AS rn,
                      count(*) OVER (PARTITION BY term) AS df
               FROM t)
-        SELECT term, df, list_sort(list(doc_id)) AS postings,
+        SELECT term, df,
+               array_to_string(list_sort(list(doc_id)), ',') AS postings,
                df - len(list(doc_id)) AS n_dropped
         FROM r WHERE rn <= 10 GROUP BY term, df
     """
@@ -5036,7 +5053,8 @@ def oracle_sql() -> dict[str, str]:
                      * 1000000.0) AS BIGINT) AS q6
           FROM q),
         main AS (
-          SELECT source, count(*) AS n_docs, sum(nt) AS n_tokens,
+          SELECT source, count(*) AS n_docs,
+                 CAST(sum(nt) AS BIGINT) AS n_tokens,
                  sum(CASE WHEN nt < 20 THEN 1 ELSE 0 END) AS n_short,
                  sum(q6) AS sum_q6
           FROM d GROUP BY source),
@@ -5385,10 +5403,10 @@ def oracle_sql() -> dict[str, str]:
             f" {'+' if s == 1 else '-'} CAST(embedding[{_i + 1}] AS DOUBLE)"
             for _i, s in enumerate(_signs[_j])
         )
-        _jl_comps.append(f"round(({_terms}) * {_scale}, 6)")
+        _jl_comps.append(f"printf('%.6f', round(({_terms}) * {_scale}, 6))")
     sql["jl_project"] = (
-        f"SELECT vec_id, [{', '.join(_jl_comps)}] AS projected "
-        "FROM embeddings"
+        f"SELECT vec_id, array_to_string([{', '.join(_jl_comps)}], ',') "
+        "AS projected FROM embeddings"
     )
     # kg_entity_report twin: per-side modal predicate via the
     # corpus_report row_number FILTER pattern; sums cast back to BIGINT

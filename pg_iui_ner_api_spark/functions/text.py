@@ -109,12 +109,6 @@ def punct_ratio(c: Column) -> Column:
     return (F.length(c) - F.length(stripped)) / F.greatest(F.length(c), F.lit(1))
 
 
-def stopword_ratio(c: Column, stopwords: tuple[str, ...] = LANG_MARKERS["en"]) -> Column:
-    toks = tokens(F.lower(c))
-    sw = F.size(F.filter(toks, lambda t: t.isin(*stopwords)))
-    return sw / F.greatest(F.size(toks), F.lit(1))
-
-
 def quality_score(c: Column) -> Column:
     """Composite document-quality score in [0,1]: length band + low punct
     + some stopword mass (the C4/Gopher-style heuristic family)."""

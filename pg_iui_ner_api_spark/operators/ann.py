@@ -66,16 +66,6 @@ def _centroids(dim: int, ncells: int):
     return rows
 
 
-def _centroid_df(spark, dim: int, ncells: int):
-    """Centroids as a JVM LocalRelation (see synth.local_dim_df: a
-    createDataFrame dim pays a Python-RDD job per broadcast collect)."""
-    from ..synth import local_dim_df
-
-    return local_dim_df(spark, _centroids(dim, ncells), ["cell", "cent"]).select(
-        "cell", F.col("cent").cast("array<double>").alias("cent")
-    )
-
-
 def _argmax_cell(cents: list[tuple[int, list[float]]], emb_col: str):
     """Map-only argmax-dot Column over a foldable centroid literal array
     (centroids unit-norm, so argmax(dot) == argmax(cosine); ties to the

@@ -186,36 +186,38 @@ def incremental_components(assign: DataFrame, new_edges: DataFrame,
     return untouched.unionByName(sub.select("node", "component"))
 
 
-def block_pairs(linked_mentions: DataFrame) -> DataFrame:
-    """Distinct ``(entity_id, surface)`` pairs of the bipartite
-    entity↔surface block graph; ``surface`` is the lowercased mention
-    word. The corpus-sized mention table contributes only this
-    projection, bounded by |vocabulary| × |entities|."""
-    return linked_mentions.select(
-        "entity_id", F.lower("word").alias("surface")
-    ).distinct()
+def link_stats(linked_mentions: DataFrame) -> DataFrame:
+    """``(entity_id, surface, canonical_name, link_kind, cnt)`` — the
+    ADDITIVE sufficient statistics of canonicalization (``surface`` is
+    the lowercased word): its ``(entity_id, surface)`` pairs are the
+    block graph and every node vote is a marginal of ``cnt``. Bounded by
+    |vocabulary| × |entities|, never by the corpus."""
+    return linked_mentions.groupBy(
+        "entity_id", F.lower("word").alias("surface"),
+        "canonical_name", "link_kind",
+    ).agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def _entity_node() -> Column:
     return F.xxhash64(F.concat(F.lit("e:"), F.col("entity_id")))
 
 
-def block_edges(pairs: DataFrame) -> DataFrame:
-    """Block-graph edges ``(u, v)`` of :func:`block_pairs` rows: 64-bit
+def block_edges(stats: DataFrame) -> DataFrame:
+    """Block-graph edges ``(u, v)`` of :func:`link_stats` rows: 64-bit
     hashed node ids, surfaces salted into an id space disjoint from
     entities by a tag prefix."""
-    return pairs.select(
+    return stats.select(
         _entity_node().alias("u"),
         F.xxhash64(F.concat(F.lit("s:"), F.col("surface"))).alias("v"),
     )
 
 
-def entity_components(pairs: DataFrame, assign: DataFrame) -> DataFrame:
-    """``(entity_id, node, component)``: one row per entity of ``pairs``,
+def entity_components(stats: DataFrame, assign: DataFrame) -> DataFrame:
+    """``(entity_id, node, component)``: one row per entity of ``stats``,
     its component read from the block-graph ``(node, component)``
     assignment ``assign``."""
     return (
-        pairs.select("entity_id").distinct()
+        stats.select("entity_id").distinct()
         .withColumn("node", _entity_node())
         .join(assign, "node", "left")
         .select("entity_id", "node",
@@ -223,7 +225,28 @@ def entity_components(pairs: DataFrame, assign: DataFrame) -> DataFrame:
     )
 
 
-def canonical_components(linked_mentions: DataFrame) -> DataFrame:
+def fold_components(
+    delta: DataFrame, prev: tuple[DataFrame, DataFrame] | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Fold a :func:`link_stats` DELTA into ``prev = (stats, assign)``
+    (``assign``: the block graph's ``(node, component)`` assignment) and
+    return the new pair. With ``prev`` the stats union-sum and only the
+    delta's NEW ``(entity_id, surface)`` pairs reach
+    :func:`incremental_components`; without, the delta is the state."""
+    if prev is None:
+        return delta, connected_components(block_edges(delta))
+    stats, assign = prev
+    pair = ["entity_id", "surface"]
+    new_pairs = delta.join(stats.select(*pair), pair, "left_anti")
+    folded = (
+        stats.unionByName(delta)
+        .groupBy(*pair, "canonical_name", "link_kind")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
+    return folded, incremental_components(assign, block_edges(new_pairs))
+
+
+def canonical_components(stats: DataFrame) -> DataFrame:
     """Entity-level canonicalization -> component per linked entity.
 
     Two mentions co-refer iff they are connected through shared linked
@@ -232,37 +255,26 @@ def canonical_components(linked_mentions: DataFrame) -> DataFrame:
     (entity e, surface s) connects e—s; components of mentions =
     components of their entity nodes in that graph, so the component is
     a function of the entity. At 10^12 documents the graph is still
-    dimension-sized (:func:`block_pairs`), and a hub entity with 10^9
-    mentions is exactly one node here; skew never reaches the loop.
+    dimension-sized (``stats`` is :func:`link_stats`), and a hub entity
+    with 10^9 mentions is exactly one node here; skew never reaches the
+    loop.
 
     Returns ``(entity_id, node, component)``, one row per linked entity,
     with node/component being stable 64-bit hashes of block-graph ids.
     """
-    pairs = block_pairs(linked_mentions).localCheckpoint()
-    return entity_components(pairs, connected_components(block_edges(pairs)))
+    return entity_components(stats, fold_components(stats)[1])
 
 
-def entity_vote_counts(linked_mentions: DataFrame) -> DataFrame:
-    """``(entity_id, canonical_name, link_kind, cnt)`` — the ADDITIVE
-    sufficient statistics of every canonical-node vote. Counting
-    mentions per (entity, name, kind) once lets a maintenance pass fold
-    a mention DELTA into accumulated counts with one dimension-sized
-    aggregation instead of re-reading the corpus: all of
-    :func:`canonical_nodes`'s votes are marginals of this table."""
-    return linked_mentions.groupBy(
-        "entity_id", "canonical_name", "link_kind"
-    ).agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def _vote(ent_votes: DataFrame, ent_comp: DataFrame, col: str) -> DataFrame:
+def _vote(stats: DataFrame, ent_comp: DataFrame, col: str) -> DataFrame:
     """``(component, <col>, n_mentions)``: the per-component modal value
-    of ``col`` over the additive vote counts, with a DETERMINISTIC
-    tie-break ``min(struct(-count, value))`` — the largest count wins,
-    ties go to the smallest value. ``F.mode()`` breaks ties by partition
+    of ``col`` over the additive counts of :func:`link_stats` (summed
+    over surfaces), with a DETERMINISTIC tie-break
+    ``min(struct(-count, value))`` — the largest count wins, ties go to
+    the smallest value. ``F.mode()`` breaks ties by partition
     order; this is the same tie-break :func:`fusion.entity_report` uses,
     so every vote in the repo agrees."""
     c = (
-        ent_votes.join(ent_comp.select("entity_id", "component"), "entity_id")
+        stats.join(ent_comp.select("entity_id", "component"), "entity_id")
         .groupBy("component", col).agg(F.sum("cnt").alias("c"))
     )
     return c.groupBy("component").agg(
@@ -272,9 +284,9 @@ def _vote(ent_votes: DataFrame, ent_comp: DataFrame, col: str) -> DataFrame:
     )
 
 
-def canonical_nodes(ent_votes: DataFrame, ent_comp: DataFrame) -> DataFrame:
+def canonical_nodes(stats: DataFrame, ent_comp: DataFrame) -> DataFrame:
     """KG node table: one row per canonical entity cluster, built from
-    the vote counts of :func:`entity_vote_counts` and the
+    the counts of :func:`link_stats` and the
     ``(entity_id, component)`` map of :func:`canonical_components`.
 
     Representative entity = modal linked entity of the component;
@@ -283,13 +295,13 @@ def canonical_nodes(ent_votes: DataFrame, ent_comp: DataFrame) -> DataFrame:
     Each entity lies in exactly one component, so representatives are
     distinct across components. Every input is dimension-sized (entity
     vocabulary), never corpus-sized, which is what lets the streaming
-    compactor fold a delta into accumulated votes.
+    compactor fold a delta into accumulated counts.
     """
     return (
-        _vote(ent_votes, ent_comp, "entity_id")
-        .join(_vote(ent_votes, ent_comp, "canonical_name")
+        _vote(stats, ent_comp, "entity_id")
+        .join(_vote(stats, ent_comp, "canonical_name")
               .drop("n_mentions"), "component")
-        .join(_vote(ent_votes, ent_comp, "link_kind")
+        .join(_vote(stats, ent_comp, "link_kind")
               .drop("n_mentions"), "component")
         .select("entity_id", "canonical_name",
                 F.col("link_kind").alias("kind"), "n_mentions")
@@ -304,7 +316,7 @@ def entity_canonical_map(
     takes, so the map and the node table agree by construction.
     Representatives map to themselves. Dimension-sized output: bounded
     by the entity vocabulary, never the corpus."""
-    rep = _vote(entity_vote_counts(linked_mentions), components, "entity_id")
+    rep = _vote(link_stats(linked_mentions), components, "entity_id")
     return components.join(
         rep.select("component", F.col("entity_id").alias("canonical_id")),
         "component",

@@ -32,7 +32,6 @@ from __future__ import annotations
 
 import bisect
 import re
-import zlib
 from dataclasses import dataclass
 
 import numpy as np
@@ -496,8 +495,3 @@ class HFTagger:
                     text[max(0, s.start - CTX_WINDOW) : s.end + CTX_WINDOW]
                 )
         return pd.DataFrame(out) if out["doc_id"] else None
-
-
-def mention_score_of(alias: str) -> float:
-    """Stable pseudo-confidence for a gazetteer alias (test oracle helper)."""
-    return float(np.float32(0.5 + (zlib.crc32(alias.encode()) % 500) / 1000.0))

@@ -35,10 +35,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 def file_row_counts(out: str) -> list[dict]:
     """``[{file, rows}]`` for every non-empty parquet part file under
-    ``out``, from the footers alone. Walks subdirectories (``partition_by``
-    writes ``<col>=<value>/`` dirs) and skips ``_``/``.`` entries, which
-    Spark's readers skip too (``_SUCCESS``, ``.crc`` checksums,
-    ``_temporary``)."""
+    ``out``, from the footers alone; ``file`` is the path relative to
+    ``out``. Walks subdirectories (``partition_by`` writes
+    ``<col>=<value>/`` dirs, which repeat part-file names) and skips
+    ``_``/``.`` entries, which Spark's readers skip too (``_SUCCESS``,
+    ``.crc`` checksums, ``_temporary``)."""
     import pyarrow.parquet as pq
 
     parts = []
@@ -47,9 +48,10 @@ def file_row_counts(out: str) -> list[dict]:
         for f in sorted(files):
             if f.startswith(("_", ".")):
                 continue
-            rows = pq.read_metadata(os.path.join(root, f)).num_rows
+            path = os.path.join(root, f)
+            rows = pq.read_metadata(path).num_rows
             if rows:
-                parts.append({"file": f, "rows": rows})
+                parts.append({"file": os.path.relpath(path, out), "rows": rows})
     return parts
 
 
@@ -140,10 +142,13 @@ class StageRunner:
         write entirely.
 
         ``bucket_by`` materializes the stage as a BUCKETED external
-        catalog table at the same workdir path (plans/bucketing.py
-        rationale): downstream re-joins of two stages bucketed on the
-        same key with the same count need zero Exchange — the 100 TB
-        write-side shape for tables that are re-joined constantly.
+        catalog table at the same workdir path: ``bucketBy(n, key)``
+        hash-partitions rows into a fixed number of files at write time
+        and the scan reports that HashPartitioning, so downstream
+        re-joins of two stages bucketed on the same key with the same
+        count need zero Exchange — the 100 TB write-side shape for
+        tables that are re-joined constantly (tests/test_bucketing.py
+        pins the plans).
         """
         if self.workdir is None:
             self.events.append({"stage": name, "action": "inline"})

@@ -2,8 +2,13 @@
 
     documents ──extract──> mentions + predicates      (1 corpus scan)
        mentions ──link──> linked_mentions             (broadcast joins)
-       linked  ──canonicalize──> components, nodes    (per-entity CC, votes)
        linked + predicates ──assemble──> edges        (co-keyed joins)
+       linked ──link_stats──> components, nodes       (per-entity CC, votes)
+
+The per-document steps live in :func:`graph_increment`, which the
+streaming ingest also runs per micro-batch; canonicalization reads only
+``components.link_stats``, which the streaming compactor folds batch by
+batch into its ``stats`` + ``assign`` state.
 
 Partitioning contract: one explicit doc_id hash partitioning
 (north_rule), placed AFTER the map-only linking stage — extraction and
@@ -20,27 +25,30 @@ plans.lineage.StageRunner.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import functools
+
+from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import components as C, linking as L, ner as N, triples as T
 from ..synth import alias_df as _alias_df, entity_emb_df as _emb_df
 from .lineage import StageRunner
 
 
-def run_kg_pipeline(
-    spark: SparkSession,
+def graph_increment(
+    runner: StageRunner,
     documents: DataFrame,
-    alias_df: DataFrame | None = None,
-    entity_emb_df: DataFrame | None = None,
-    workdir: str | None = None,
-    run_id: str = "run0",
-    input_fingerprint: str = "",
-    doc_partitions: int | None = None,
+    alias_df: DataFrame | None,
+    entity_emb_df: DataFrame | None,
+    n_part: int,
 ) -> dict[str, DataFrame]:
+    """``documents`` -> extraction, mentions, predicates, linked mentions
+    and edges, staged through ``runner``. Every output row depends on its
+    own document only, so a micro-batch's outputs are the corpus outputs
+    restricted to its documents. ``None`` dimensions default to the
+    built-in synthetic gazetteer."""
+    spark = documents.sparkSession
     alias = alias_df if alias_df is not None else _alias_df(spark)
     embs = entity_emb_df if entity_emb_df is not None else _emb_df(spark)
-    runner = StageRunner(spark, workdir, run_id=run_id, input_fingerprint=input_fingerprint)
-    n_part = doc_partitions or spark.sparkContext.defaultParallelism
 
     def _extract() -> DataFrame:
         # map-only: no shuffle here — ctx strings stay in their input
@@ -67,29 +75,49 @@ def run_kg_pipeline(
         lambda: L.link_mentions(mentions, alias, embs).repartition(n_part, "doc_id"),
         **bk,
     )
-    comps = runner.stage("components", lambda: C.canonical_components(linked),
-                         persist=False)
-    nodes = runner.stage(
-        "nodes", lambda: C.canonical_nodes(C.entity_vote_counts(linked), comps),
-        persist=False, bucket_by="entity_id", n_buckets=n_part,
-    )
     edges = runner.stage("edges", lambda: T.assemble_triples(linked, predicates),
                          persist=False, **bk)
-    out = {}
-    if runner.workdir is not None:
-        # entity-keyed twin of the edge table: re-bucket (one shuffle at
-        # write time) so graph-side joins against nodes are co-located
-        out["edges_by_subj"] = runner.stage(
-            "edges_by_subj", lambda: edges, bucket_by="subj", n_buckets=n_part
-        )
-
-    return out | {
+    return {
         "extraction": extraction,
         "mentions": mentions,
         "predicates": predicates,
         "linked_mentions": linked,
-        "components": comps,
-        "nodes": nodes,
         "edges": edges,
-        "_runner": runner,
     }
+
+
+def run_kg_pipeline(
+    spark: SparkSession,
+    documents: DataFrame,
+    alias_df: DataFrame | None = None,
+    entity_emb_df: DataFrame | None = None,
+    workdir: str | None = None,
+    run_id: str = "run0",
+    input_fingerprint: str = "",
+    doc_partitions: int | None = None,
+) -> dict[str, DataFrame]:
+    runner = StageRunner(spark, workdir, run_id=run_id, input_fingerprint=input_fingerprint)
+    n_part = doc_partitions or spark.sparkContext.defaultParallelism
+    out = graph_increment(runner, documents, alias_df, entity_emb_df, n_part)
+
+    @functools.cache
+    def stats() -> DataFrame:
+        # the whole corpus is one delta of the streaming compactor's
+        # fold; one aggregation of linked feeds both canonicalization
+        # stages, and none runs when both resume
+        return C.link_stats(out["linked_mentions"]).localCheckpoint()
+
+    comps = out["components"] = runner.stage(
+        "components", lambda: C.canonical_components(stats()), persist=False)
+    out["nodes"] = runner.stage(
+        "nodes", lambda: C.canonical_nodes(stats(), comps),
+        persist=False, bucket_by="entity_id", n_buckets=n_part,
+    )
+    if runner.workdir is not None:
+        # entity-keyed twin of the edge table: re-bucket (one shuffle at
+        # write time) so graph-side joins against nodes are co-located
+        out["edges_by_subj"] = runner.stage(
+            "edges_by_subj", lambda: out["edges"], bucket_by="subj", n_buckets=n_part
+        )
+    out["_runner"] = runner
+    return out

@@ -55,12 +55,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    so the same entrypoints serve pytest, perfbench and spark-submit; on a
-    real cluster the caller simply omits ``master`` and lets
-    spark-submit supply it.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default:
+    the CPUs this process may run on) so the same entrypoints serve
+    pytest, perfbench and spark-submit; on a real cluster the caller
+    simply omits ``master`` and lets spark-submit supply it.
+    ``shuffle_partitions`` defaults to ``max(4 * cores, 32)``.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     # Each Python UDF worker inherits this env; numpy/BLAS default to
@@ -108,9 +109,10 @@ def get_spark(
     if add:
         os.environ["SPARK_SUBMIT_OPTS"] = (cur + " " + " ".join(add)).strip()
     if shuffle_partitions is None:
-        # one shuffle partition per core locally; a real cluster would
-        # size this to ~2-3x total cores (AQE coalesces the excess).
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        # a few partitions per core, never fewer than 32: one per core
+        # cut kg_workdir_wide 357 -> 233 docs/s on a 4-core host, and
+        # AQE coalesces the excess on small inputs
+        shuffle_partitions = max(4 * int(cpus), 32) if cpus.isdigit() else 32
 
     b = (
         SparkSession.builder.appName(app_name)
@@ -145,30 +147,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Register the driver testdata parquet files as temp views.
-
-    Mirrors the DuckDB-oracle harness, which pre-registers the same
-    views; keeps our SQL-expressible queries runnable verbatim via
-    ``spark.sql``.
-    """
-    all_names = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    out = {}
-    for n in all_names:
-        df = spark.read.parquet(f"{sf_dir}/{n}.parquet")
-        df.createOrReplaceTempView(n)
-        out[n] = df
-    return out

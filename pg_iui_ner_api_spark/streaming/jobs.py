@@ -16,6 +16,8 @@ count-based batch flushing (W2, lines 47-50), plus a polling scheduler
   * ``stream_windowed_event_counts`` — event-time tumbling window with
     a watermark for late data (W2's time-based twin; the driver
     testdata ``events`` table has real timestamps).
+  * ``stream_kg_increment`` + ``compact_kg_nodes`` — the KG pipeline's
+    continuous twin, built from the batch pipeline's own parts.
 
 Checkpointing: Spark's own streaming checkpoint (offset log + state
 store) supplies exactly-once per sink; the batch pipeline's lineage
@@ -293,32 +295,30 @@ def stream_kg_increment(spark: SparkSession, input_dir: str, workdir: str,
     """documents stream -> linked mentions + edges, idempotently appended.
 
     foreachBatch (triple assembly's as-of window is not expressible
-    inside a single streaming query) writing each micro-batch to its own
-    ``batch=<id>`` partition with overwrite: a replayed batch id rewrites
-    the same partition, so the file-source checkpoint + partition
-    overwrite give effective exactly-once without a transactional sink.
-    Output layout:
+    inside a single streaming query) runs
+    :func:`plans.pipeline.graph_increment` inline over each micro-batch
+    and writes it to its own ``batch=<id>`` partition with overwrite: a
+    replayed batch id rewrites the same partition, so the file-source
+    checkpoint + partition overwrite give effective exactly-once without
+    a transactional sink. Output layout:
 
       workdir/linked_inc/batch=<id>/   linked-mention log (compaction input)
       workdir/edges_inc/batch=<id>/    edge increments (graph append)
     """
-    from ..operators import linking as L, triples as T
-    from ..synth import alias_df as _alias_df, entity_emb_df as _emb_df
-
-    alias = alias_df if alias_df is not None else _alias_df(spark)
-    embs = entity_emb_df if entity_emb_df is not None else _emb_df(spark)
+    from ..plans.lineage import StageRunner
+    from ..plans.pipeline import graph_increment
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        ext = N.extract(batch_df).persist()
+        runner = StageRunner(spark, None)
         try:
-            linked = L.link_mentions(N.mentions_of(ext), alias, embs)
-            edges = T.assemble_triples(linked, N.predicates_of(ext))
-            linked.write.mode("overwrite").parquet(
-                f"{workdir}/linked_inc/batch={batch_id}")
-            edges.write.mode("overwrite").parquet(
-                f"{workdir}/edges_inc/batch={batch_id}")
+            inc = graph_increment(runner, batch_df, alias_df, entity_emb_df,
+                                  spark.sparkContext.defaultParallelism)
+            for name, out in (("linked_mentions", "linked_inc"),
+                              ("edges", "edges_inc")):
+                inc[name].write.mode("overwrite").parquet(
+                    f"{workdir}/{out}/batch={batch_id}")
         finally:
-            ext.unpersist()
+            runner.unpersist()
 
     writer = (
         stream_documents(spark, input_dir, max_files_per_trigger)
@@ -339,19 +339,15 @@ def compact_kg_nodes(
     run per micro-batch; but it also must not re-read the whole
     accumulated log per compaction (r4 VERDICT #4: at a 10^12-doc log
     the full reread is the scale-killer in an otherwise incremental
-    path). The compactor keeps three DIMENSION-sized state tables under
+    path). The compactor keeps two DIMENSION-sized state tables under
     ``workdir/compact_state`` and folds only the batches newer than its
-    high-water mark:
+    high-water mark with :func:`operators.components.fold_components`:
 
-      * ``pairs``  — distinct (entity_id, surface) bipartite pairs; the
-        delta's NEW pairs (one anti-join) are the only CC input;
-      * ``assign`` — the bipartite (node, component) assignment,
-        maintained by :func:`operators.components.incremental_components`
-        (cost ∝ delta + touched components, never history);
-      * ``votes``  — additive (entity, name, kind, cnt) counts
-        (:func:`entity_vote_counts`); the node table is rebuilt from
-        these marginals (:func:`canonical_nodes`) without
-        touching any corpus-sized table.
+      * ``stats``  — the additive link statistics
+        (:func:`operators.components.link_stats`); the node table is
+        rebuilt from them without touching any corpus-sized table;
+      * ``assign`` — the block graph's (node, component) assignment
+        (cost of a fold ∝ delta + touched components, never history).
 
     State versions are written to ``v=<high-water batch>`` dirs and the
     meta file is updated LAST, so a crash mid-compaction resumes from
@@ -388,38 +384,26 @@ def compact_kg_nodes(
             f"{inc_dir}; run stream_kg_increment first"
         )
 
-    delta = spark.read.parquet(
+    state = ("stats", "assign")
+    delta = C.link_stats(spark.read.parquet(
         *[f"{inc_dir}/batch={b}" for b in new_ids]
+    ))
+    prev = None if meta is None else tuple(
+        spark.read.parquet(f"{state_dir}/{name}/v={meta['version']}")
+        for name in state
     )
-    dv = C.entity_vote_counts(delta)
-    dp = C.block_pairs(delta)
-    if meta is not None:
-        v = meta["version"]
-        prev_votes = spark.read.parquet(f"{state_dir}/votes/v={v}")
-        prev_pairs = spark.read.parquet(f"{state_dir}/pairs/v={v}")
-        prev_assign = spark.read.parquet(f"{state_dir}/assign/v={v}")
-        votes = (
-            prev_votes.unionByName(dv)
-            .groupBy("entity_id", "canonical_name", "link_kind")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        new_pairs = dp.join(prev_pairs, ["entity_id", "surface"], "left_anti")
-        pairs = prev_pairs.unionByName(new_pairs)
-        assign = C.incremental_components(prev_assign, C.block_edges(new_pairs))
-    else:
-        votes, pairs = dv, dp
-        assign = C.connected_components(C.block_edges(dp))
-    nodes = C.canonical_nodes(votes, C.entity_components(pairs, assign))
+    stats, assign = C.fold_components(delta, prev)
+    nodes = C.canonical_nodes(stats, C.entity_components(stats, assign))
 
     hwm = max(new_ids)
-    for name, df in (("votes", votes), ("pairs", pairs), ("assign", assign)):
+    for name, df in zip(state, (stats, assign)):
         df.write.mode("overwrite").parquet(f"{state_dir}/{name}/v={hwm}")
     nodes.write.mode("overwrite").parquet(f"{workdir}/nodes")
     tmp = meta_path + ".tmp"
     with open(tmp, "w") as f:
         json.dump({"last_batch": hwm, "version": hwm}, f)
     os.replace(tmp, meta_path)
-    for name in ("votes", "pairs", "assign"):
+    for name in state:
         root = f"{state_dir}/{name}"
         for d in os.listdir(root):
             if d.startswith("v=") and d != f"v={hwm}":

@@ -1,26 +1,29 @@
 """Bucketed-table co-located joins: the write-side answer to repeated
 big-big joins at corpus scale (prompt: 'repartition()/bucketing for
-co-located joins')."""
+co-located joins'), pinned on the tables the engine's own stage writer
+(``StageRunner.stage(..., bucket_by=...)``) materializes."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from pg_iui_ner_api_spark.plans.bucketing import read_bucketed, write_bucketed
+from pg_iui_ner_api_spark.plans.lineage import StageRunner
 
 
 @pytest.fixture(scope="module")
-def bucketed_pair(spark):
+def bucketed_pair(spark, tmp_path_factory):
     a = spark.range(2000).select(
         F.col("id").alias("k"), (F.col("id") * 3).alias("va")
     )
     b = spark.range(2000).select(
         F.col("id").alias("k"), (F.col("id") * 7).alias("vb")
     )
-    write_bucketed(a, "bk_a", "k", n_buckets=8)
-    write_bucketed(b, "bk_b", "k", n_buckets=8)
-    yield "bk_a", "bk_b"
-    spark.sql("DROP TABLE IF EXISTS bk_a")
-    spark.sql("DROP TABLE IF EXISTS bk_b")
+    runner = StageRunner(spark, str(tmp_path_factory.mktemp("bk")),
+                         input_fingerprint="fp")
+    ta = runner.stage("bk_a", lambda: a, bucket_by="k", n_buckets=8)
+    tb = runner.stage("bk_b", lambda: b, bucket_by="k", n_buckets=8)
+    yield ta, tb
+    for name in ("bk_a", "bk_b"):
+        spark.sql(f"DROP TABLE IF EXISTS {runner._table_name(name)}")
 
 
 def test_cobucketed_join_has_no_exchange(spark, bucketed_pair):
@@ -31,7 +34,7 @@ def test_cobucketed_join_has_no_exchange(spark, bucketed_pair):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = read_bucketed(spark, ta).join(read_bucketed(spark, tb), "k")
+        joined = ta.join(tb, "k")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
         assert "SortMergeJoin" in plan, plan
@@ -126,6 +129,6 @@ def test_stale_bucket_layout_recomputes(spark, tmp_path):
 def test_bucketed_join_results_match_plain_join(spark, bucketed_pair):
     ta, tb = bucketed_pair
     got = {(r["k"], r["va"], r["vb"])
-           for r in read_bucketed(spark, ta).join(read_bucketed(spark, tb), "k").collect()}
+           for r in ta.join(tb, "k").collect()}
     want = {(i, i * 3, i * 7) for i in range(2000)}
     assert got == want

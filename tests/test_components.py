@@ -158,7 +158,7 @@ def test_canonical_nodes_hand_built_votes(spark):
         canonical_components,
         canonical_nodes,
         entity_canonical_map,
-        entity_vote_counts,
+        link_stats,
     )
 
     lm = spark.createDataFrame(
@@ -178,10 +178,11 @@ def test_canonical_nodes_hand_built_votes(spark):
         "mention_id long, entity_id string, word string, "
         "canonical_name string, link_kind string",
     ).repartition(3)
-    comps = canonical_components(lm)
+    stats = link_stats(lm)
+    comps = canonical_components(stats)
     assert comps.columns == ["entity_id", "node", "component"]
     assert comps.count() == 5
-    nodes = canonical_nodes(entity_vote_counts(lm), comps)
+    nodes = canonical_nodes(stats, comps)
     assert sorted(tuple(r) for r in nodes.collect()) == [
         ("Q1", "Acme Corp", "ORG", 2),
         ("Q5", "City of Paris", "LOC", 5),
@@ -190,3 +191,44 @@ def test_canonical_nodes_hand_built_votes(spark):
     got = {r.entity_id: r.canonical_id
            for r in entity_canonical_map(lm, comps).collect()}
     assert got == {"Q1": "Q1", "Q2": "Q1", "Q4": "Q5", "Q5": "Q5", "Q9": "Q9"}
+
+
+def test_fold_components_two_deltas_equal_one(spark):
+    """Folding link statistics delta by delta gives the state a single
+    fold of the union gives: the same summed counts, and the same
+    component per entity — including a second delta that merges two
+    earlier components through a new surface (relabelling the larger
+    component id) and one that only adds counts to known pairs."""
+    from pg_iui_ner_api_spark.operators.components import (
+        entity_components,
+        fold_components,
+        link_stats,
+    )
+
+    cols = ("mention_id long, entity_id string, word string, "
+            "canonical_name string, link_kind string")
+    first = [
+        (1, "Q1", "Acme", "Acme Corp", "ORG"),
+        (2, "Q2", "Initech", "Initech", "ORG"),
+        (3, "Q3", "Paris", "Paris", "LOC"),
+    ]
+    second = [
+        (4, "Q2", "acme", "Initech", "ORG"),      # new pair: merges Q1, Q2
+        (5, "Q3", "PARIS", "City of Paris", "LOC"),  # known pair, new name
+        (6, "Q9", "Bob", "Bob", "PER"),           # new component
+    ]
+    d1 = link_stats(spark.createDataFrame(first, cols))
+    d2 = link_stats(spark.createDataFrame(second, cols))
+    both = link_stats(spark.createDataFrame(first + second, cols))
+
+    def state(stats, assign):
+        comp = {r.entity_id: r.component
+                for r in entity_components(stats, assign).collect()}
+        return sorted(tuple(r) for r in stats.collect()), comp
+
+    folded = state(*fold_components(d2, fold_components(d1)))
+    whole = state(*fold_components(both))
+    assert folded == whole
+    comp = whole[1]
+    assert comp["Q1"] == comp["Q2"] != comp["Q3"] != comp["Q9"]
+    assert ("Q3", "paris", "City of Paris", "LOC", 1) in whole[0]

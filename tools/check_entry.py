@@ -1,9 +1,11 @@
 """Local mimic of the driver's correctness gate.
 
 Runs every ``__spark_entry__.queries()`` entry at sf0.01 on Spark AND its
-``oracle_sql()`` twin on DuckDB, then compares row count, column names,
-and an order-insensitive value hash (columns sorted by name, rows sorted
-by their string form — same contract TESTDATA.md describes).
+``oracle_sql()`` twin on DuckDB, fetched as pandas frames as the gate
+does (``toPandas()``, ``.df()``), then compares row count, column names,
+per-column dtype kind, and an order-insensitive value hash (columns
+sorted by name, rows sorted by their string form — same contract
+TESTDATA.md describes). List and struct columns fail, as in the gate.
 
 Usage: python tools/check_entry.py [sf_dir] [only_query ...]
 """
@@ -18,6 +20,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
+import numpy as np
+import pandas as pd
 
 import __spark_entry__ as E
 from pg_iui_ner_api_spark.session import get_spark
@@ -49,6 +53,29 @@ def _cell(v) -> str:
     return str(v)
 
 
+def _nested(v) -> bool:
+    return isinstance(v, (list, tuple, dict, np.ndarray))
+
+
+def frame_problems(sp: pd.DataFrame, od: pd.DataFrame) -> list[str]:
+    """What the gate's compare of Spark frame ``sp`` against DuckDB
+    frame ``od`` trips on: nested cells, and dtype kinds that differ
+    (a HUGEINT ``SUM()`` reaches pandas as float64, Spark's as int64)."""
+    problems = []
+    for side, pdf in (("spark", sp), ("duckdb", od)):
+        nested = [c for c in pdf.columns if pdf[c].map(_nested).any()]
+        if nested:
+            problems.append(f"{side} list/struct columns {nested}")
+    for c in sorted(set(sp.columns) & set(od.columns)):
+        if sp[c].dtype.kind != od[c].dtype.kind:
+            problems.append(f"dtype {c}: {sp[c].dtype} vs {od[c].dtype}")
+    return problems
+
+
+def _rows(pdf: pd.DataFrame) -> list[tuple]:
+    return list(pdf.itertuples(index=False, name=None))
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -65,9 +92,9 @@ def main() -> int:
             continue
         t0 = time.monotonic()
         try:
-            df = fn(spark, sf_dir)
-            cols = df.columns
-            rows = [tuple(r) for r in df.collect()]
+            sp = fn(spark, sf_dir).toPandas()
+            cols = list(sp.columns)
+            rows = _rows(sp)
         except Exception as ex:
             print(f"FAIL {name}: spark error: {ex}")
             failures += 1
@@ -77,14 +104,14 @@ def main() -> int:
             print(f"ok   {name}: rows-only ({len(rows)} rows, {dt:.1f}s)")
             continue
         try:
-            res = con.execute(oracles[name])
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
+            od = con.execute(oracles[name]).df()
+            ocols = list(od.columns)
+            orows = _rows(od)
         except Exception as ex:
             print(f"FAIL {name}: duckdb error: {ex}")
             failures += 1
             continue
-        problems = []
+        problems = frame_problems(sp, od)
         if len(rows) != len(orows):
             problems.append(f"rowcount {len(rows)} vs {len(orows)}")
         if sorted(cols) != sorted(ocols):
