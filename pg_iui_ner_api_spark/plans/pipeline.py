@@ -5,10 +5,11 @@
        linked + predicates ──assemble──> edges        (co-keyed joins)
        linked ──link_stats──> components, nodes       (per-entity CC, votes)
 
-The per-document steps live in :func:`graph_increment`, which the
-streaming ingest also runs per micro-batch; canonicalization reads only
-``components.link_stats``, which the streaming compactor folds batch by
-batch into its ``stats`` + ``assign`` state.
+The per-document steps live in :func:`graph_increment` and
+:func:`stage_edges`, which the streaming ingest also runs per
+micro-batch; canonicalization reads only ``components.link_stats``,
+which the streaming compactor folds batch by batch into its ``stats``
++ ``assign`` state.
 
 Partitioning contract: one explicit doc_id hash partitioning
 (north_rule), placed AFTER the map-only linking stage — extraction and
@@ -39,16 +40,22 @@ def graph_increment(
     documents: DataFrame,
     alias_df: DataFrame | None,
     entity_emb_df: DataFrame | None,
-    n_part: int,
+    n_part: int | None,
 ) -> dict[str, DataFrame]:
-    """``documents`` -> extraction, mentions, predicates, linked mentions
-    and edges, staged through ``runner``. Every output row depends on its
-    own document only, so a micro-batch's outputs are the corpus outputs
-    restricted to its documents. ``None`` dimensions default to the
-    built-in synthetic gazetteer."""
+    """``documents`` -> extraction, mentions, predicates and linked
+    mentions, staged through ``runner``; :func:`stage_edges` adds the
+    edges. Every output row depends on its own document only, so a
+    micro-batch's outputs are the corpus outputs restricted to its
+    documents. ``None`` dimensions default to the built-in synthetic
+    gazetteer. ``n_part=None`` keeps the input partitioning (inline
+    runners only): with no bucketed write to serve, the doc_id exchange
+    would only add a shuffle."""
     spark = documents.sparkSession
     alias = alias_df if alias_df is not None else _alias_df(spark)
     embs = entity_emb_df if entity_emb_df is not None else _emb_df(spark)
+
+    def _by_doc(df: DataFrame) -> DataFrame:
+        return df if n_part is None else df.repartition(n_part, "doc_id")
 
     def _extract() -> DataFrame:
         # map-only: no shuffle here — ctx strings stay in their input
@@ -68,22 +75,33 @@ def graph_increment(
     # the ctx-free streams feeding triple assembly. In workdir mode the
     # bucketed stage write hash-partitions identically, so this is
     # satisfied-by-construction there (no double exchange).
-    predicates = N.predicates_of(extraction).repartition(n_part, "doc_id")
+    predicates = _by_doc(N.predicates_of(extraction))
 
     linked = runner.stage(
         "linked_mentions",
-        lambda: L.link_mentions(mentions, alias, embs).repartition(n_part, "doc_id"),
+        lambda: _by_doc(L.link_mentions(mentions, alias, embs)),
         **bk,
     )
-    edges = runner.stage("edges", lambda: T.assemble_triples(linked, predicates),
-                         persist=False, **bk)
     return {
         "extraction": extraction,
         "mentions": mentions,
         "predicates": predicates,
         "linked_mentions": linked,
-        "edges": edges,
     }
+
+
+def stage_edges(runner: StageRunner, inc: dict[str, DataFrame],
+                n_part: int | None) -> DataFrame:
+    """The ``edges`` stage: triple assembly over :func:`graph_increment`'s
+    linked mentions and predicates. Kept apart so the batch pipeline
+    stages it after canonicalization: building it before the first
+    canonicalization action made a fresh process's first inline call
+    ~3 s slower on a 4-core host."""
+    return runner.stage(
+        "edges",
+        lambda: T.assemble_triples(inc["linked_mentions"], inc["predicates"]),
+        persist=False, bucket_by="doc_id", n_buckets=n_part,
+    )
 
 
 def run_kg_pipeline(
@@ -113,6 +131,7 @@ def run_kg_pipeline(
         "nodes", lambda: C.canonical_nodes(stats(), comps),
         persist=False, bucket_by="entity_id", n_buckets=n_part,
     )
+    out["edges"] = stage_edges(runner, out, n_part)
     if runner.workdir is not None:
         # entity-keyed twin of the edge table: re-bucket (one shuffle at
         # write time) so graph-side joins against nodes are co-located

@@ -59,7 +59,7 @@ def get_spark(
     the CPUs this process may run on) so the same entrypoints serve
     pytest, perfbench and spark-submit; on a real cluster the caller
     simply omits ``master`` and lets spark-submit supply it.
-    ``shuffle_partitions`` defaults to ``max(4 * cores, 32)``.
+    ``shuffle_partitions`` defaults to 32, whatever the core count.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     if master is None:
@@ -109,10 +109,9 @@ def get_spark(
     if add:
         os.environ["SPARK_SUBMIT_OPTS"] = (cur + " " + " ".join(add)).strip()
     if shuffle_partitions is None:
-        # a few partitions per core, never fewer than 32: one per core
-        # cut kg_workdir_wide 357 -> 233 docs/s on a 4-core host, and
-        # AQE coalesces the excess on small inputs
-        shuffle_partitions = max(4 * int(cpus), 32) if cpus.isdigit() else 32
+        # not the core count: one partition per core cut kg_workdir_wide
+        # 357 -> 233 docs/s on a 4-core host, where 32 was measured
+        shuffle_partitions = 32
 
     b = (
         SparkSession.builder.appName(app_name)

@@ -296,26 +296,31 @@ def stream_kg_increment(spark: SparkSession, input_dir: str, workdir: str,
 
     foreachBatch (triple assembly's as-of window is not expressible
     inside a single streaming query) runs
-    :func:`plans.pipeline.graph_increment` inline over each micro-batch
-    and writes it to its own ``batch=<id>`` partition with overwrite: a
-    replayed batch id rewrites the same partition, so the file-source
-    checkpoint + partition overwrite give effective exactly-once without
-    a transactional sink. Output layout:
+    :func:`plans.pipeline.graph_increment` + ``stage_edges`` inline over
+    each micro-batch, in its input partitioning (no bucketed write to
+    serve), and writes it to its own ``batch=<id>`` partition with
+    overwrite: a replayed batch id rewrites the same partition, so the
+    file-source checkpoint + partition overwrite give effective
+    exactly-once without a transactional sink. Output layout:
 
       workdir/linked_inc/batch=<id>/   linked-mention log (compaction input)
       workdir/edges_inc/batch=<id>/    edge increments (graph append)
     """
     from ..plans.lineage import StageRunner
-    from ..plans.pipeline import graph_increment
+    from ..plans.pipeline import graph_increment, stage_edges
+    from ..synth import alias_df as _alias_df, entity_emb_df as _emb_df
+
+    # default dimensions built once per query, not once per micro-batch
+    alias = alias_df if alias_df is not None else _alias_df(spark)
+    embs = entity_emb_df if entity_emb_df is not None else _emb_df(spark)
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         runner = StageRunner(spark, None)
         try:
-            inc = graph_increment(runner, batch_df, alias_df, entity_emb_df,
-                                  spark.sparkContext.defaultParallelism)
-            for name, out in (("linked_mentions", "linked_inc"),
-                              ("edges", "edges_inc")):
-                inc[name].write.mode("overwrite").parquet(
+            inc = graph_increment(runner, batch_df, alias, embs, None)
+            for out, df in (("linked_inc", inc["linked_mentions"]),
+                            ("edges_inc", stage_edges(runner, inc, None))):
+                df.write.mode("overwrite").parquet(
                     f"{workdir}/{out}/batch={batch_id}")
         finally:
             runner.unpersist()
@@ -354,9 +359,11 @@ def compact_kg_nodes(
     the previous consistent version. Output equals the batch pipeline's
     nodes over the same corpus (pinned by test_stream_kg), and a full
     rebuild (``incremental=False`` or no state) produces identical
-    state. With no state to reuse and no linked batch under
-    ``workdir/linked_inc`` (missing or empty), raises ``ValueError``
-    before reading anything.
+    state. A state dir of an older layout (``votes``/``pairs``/
+    ``assign``) counts as no state: the compactor rebuilds in full and
+    deletes the old tables. With no state to reuse and no linked batch
+    under ``workdir/linked_inc`` (missing or empty), raises
+    ``ValueError`` before reading anything.
     """
     import json
     import os
@@ -371,10 +378,15 @@ def compact_kg_nodes(
     ) if os.path.isdir(inc_dir) else []
     state_dir = f"{workdir}/compact_state"
     meta_path = os.path.join(state_dir, "meta.json")
+    state = ("stats", "assign")
     meta = None
     if incremental and os.path.exists(meta_path):
         with open(meta_path) as f:
             meta = json.load(f)
+        if not all(os.path.isdir(f"{state_dir}/{name}/v={meta['version']}")
+                   for name in state):
+            # state of another layout (votes/pairs/assign): rebuild in full
+            meta = None
     new_ids = [b for b in batch_ids if meta is None or b > meta["last_batch"]]
     if meta is not None and not new_ids:
         return spark.read.parquet(f"{workdir}/nodes")
@@ -384,7 +396,6 @@ def compact_kg_nodes(
             f"{inc_dir}; run stream_kg_increment first"
         )
 
-    state = ("stats", "assign")
     delta = C.link_stats(spark.read.parquet(
         *[f"{inc_dir}/batch={b}" for b in new_ids]
     ))
@@ -408,6 +419,8 @@ def compact_kg_nodes(
         for d in os.listdir(root):
             if d.startswith("v=") and d != f"v={hwm}":
                 shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+    for d in set(os.listdir(state_dir)) - {*state, "meta.json"}:
+        shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
     return spark.read.parquet(f"{workdir}/nodes")
 
 

@@ -20,7 +20,7 @@ s.stop()
 def test_default_cores_and_shuffle_partitions_follow_the_host():
     """With no SPARK_GRAFT_* in the environment the master runs one
     thread per CPU this process may use, and shuffle partitions default
-    to max(4 * cores, 32) — not to the core count."""
+    to 32 — not to the core count."""
     env = {k: v for k, v in os.environ.items() if not k.startswith("SPARK_GRAFT_")}
     env["SPARK_DRIVER_MEM"] = "1g"  # a small heap: the child only starts
     env["PYTHONPATH"] = os.pathsep.join(
@@ -31,4 +31,4 @@ def test_default_cores_and_shuffle_partitions_follow_the_host():
     ).stdout
     got = json.loads(out.strip().splitlines()[-1])
     cores = len(os.sched_getaffinity(0))
-    assert got == {"master": f"local[{cores}]", "shuffle": str(max(4 * cores, 32))}
+    assert got == {"master": f"local[{cores}]", "shuffle": "32"}

@@ -307,6 +307,27 @@ def test_compact_kg_nodes_without_batches_raises(spark, tmp_path):
         J.compact_kg_nodes(spark, str(wd))
 
 
+def test_compact_kg_nodes_rebuilds_older_state_layout(spark, tmp_path):
+    """A compact_state of the older votes/pairs/assign layout (its meta
+    points at a version with no ``stats`` table) counts as no state: the
+    compactor rebuilds in full, leaves only stats + assign, and returns
+    the same nodes."""
+    docs = synth.synth_documents(spark, 60, partitions=1)
+    input_dir = str(tmp_path / "in")
+    wd = str(tmp_path / "wd")
+    docs.write.parquet(input_dir)
+    J.stream_kg_increment(spark, input_dir, wd, str(tmp_path / "ckpt")).awaitTermination()
+    node_cols = ["entity_id", "canonical_name"]
+    want = {tuple(r) for r in J.compact_kg_nodes(spark, wd).select(*node_cols).collect()}
+
+    state = tmp_path / "wd" / "compact_state"
+    (state / "stats").rename(state / "votes")
+    (state / "pairs" / "v=0").mkdir(parents=True)
+    got = J.compact_kg_nodes(spark, wd)
+    assert {tuple(r) for r in got.select(*node_cols).collect()} == want
+    assert sorted(os.listdir(state)) == ["assign", "meta.json", "stats"]
+
+
 def test_stream_dedup_exact_across_batches(spark, tmp_path):
     """A duplicate arriving in a LATER micro-batch must still be dropped
     (state store carries the seen digests across triggers), and the
