@@ -1,7 +1,23 @@
-"""Connected components via alternating large-star/small-star (SURVEY.md M6).
+"""Connected components and entity canonicalization (SURVEY.md M6).
 
-Implements the MapReduce CC algorithm of Kiveris et al., "Connected
-Components in MapReduce and Beyond" (SOCC'14), on DataFrames:
+Every solver here has two physical paths, chosen by one limited collect
+against the one shared bound ``SMALL_GRAPH_EDGES``: at or below it the
+rows are solved on the driver and the result is a LocalRelation; above
+it the work stays in Spark.
+
+* :func:`connected_components`: a driver union-find, or the
+  distributed alternating-star loop below.
+* Batch canonicalization: :func:`driver_canonicalize` collects the
+  :func:`link_stats` table once and runs the same union-find and the
+  three votes of :func:`canonical_nodes` in Python, returning both the
+  ``components`` and the ``nodes`` table; above the bound the pipeline
+  runs :func:`canonical_components` + :func:`canonical_nodes`. The
+  streaming compactor always folds with :func:`fold_components`, whose
+  ``(node, component)`` state needs the surface nodes too.
+
+The distributed loop implements the MapReduce CC algorithm of Kiveris
+et al., "Connected Components in MapReduce and Beyond" (SOCC'14), on
+DataFrames:
 
   large-star(u): for every neighbor v > u, emit (v, m(u))
   small-star(u): for every neighbor v <= u, emit (v, m(u)), plus (u, m(u))
@@ -22,6 +38,8 @@ skew-join splitting handles the remaining reduce-side skew.
 """
 
 from __future__ import annotations
+
+from typing import Iterable
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -61,48 +79,59 @@ def _small_star(e: DataFrame) -> DataFrame:
     return hang.union(self_edge).where(F.col("u") != F.col("v")).distinct()
 
 
-SMALL_GRAPH_EDGES = 2_000_000  # driver union-find below this edge count
+# Driver path at or below this many rows. Measured on a 4-core host
+# with the default driver heap, on synthetic link statistics: the driver
+# path was no slower than the distributed one for both solvers up to
+# 3*10^4 rows; at 10^5 the driver union-find lost to the star loop.
+SMALL_GRAPH_EDGES = 30_000
+
+
+def _union_find(edges: Iterable[tuple[int, int]]) -> dict[int, int]:
+    """``node -> component`` (the min node id of its component) for
+    every endpoint of ``edges`` — the one union-find both driver paths
+    run."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        r = x
+        while parent.setdefault(r, r) != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    for u, v in edges:
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            # union by min id so component = min node id (loop invariant)
+            lo, hi = (ru, rv) if ru < rv else (rv, ru)
+            parent[hi] = lo
+    return {n: find(n) for n in parent}
+
+
+def _local_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """``rows`` as a LocalRelation with the column types of ``schema``
+    (``"name type, ..."``) — also when there are no rows, which a
+    ``VALUES`` literal cannot express."""
+    fields = [f.split() for f in schema.split(",")]
+    if not rows:
+        cols = ", ".join(f"CAST(NULL AS {t}) {n}" for n, t in fields)
+        return spark.sql(f"SELECT {cols} WHERE FALSE")
+    from ..synth import local_dim_df
+
+    return local_dim_df(spark, rows, [n for n, _ in fields]).select(
+        *(F.col(n).cast(t).alias(n) for n, t in fields))
 
 
 def _driver_cc(spark, rows) -> DataFrame:
     """Union-find on the driver for small graphs — one pass, zero jobs.
 
     The distributed loop costs ~10 Spark jobs per iteration (stars +
-    checksum); below SMALL_GRAPH_EDGES the whole graph fits trivially in
-    driver memory and the answer is a LocalRelation. The canonicalization
-    block graph (entity↔surface) is vocabulary-sized, so production runs
-    take this path too unless the dictionary is enormous.
+    checksum); at or below SMALL_GRAPH_EDGES the graph fits in driver
+    memory and the answer is a LocalRelation.
     """
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        r = x
-        while parent.get(r, r) != r:
-            r = parent[r]
-        while parent.get(x, x) != x:
-            parent[x], x = r, parent[x]
-        return r
-
-    for r in rows:
-        u, v = r["u"], r["v"]
-        ru, rv = find(u), find(v)
-        if ru != rv:
-            # union by min id so component = min node id (loop invariant)
-            lo, hi = (ru, rv) if ru < rv else (rv, ru)
-            parent[hi] = lo
-    nodes = set(parent)
-    for r in rows:
-        nodes.add(r["u"])
-        nodes.add(r["v"])
-    data = [(n, find(n)) for n in sorted(nodes)]
-    from ..synth import local_dim_df
-
-    if not data:
-        return spark.sql("SELECT CAST(NULL AS BIGINT) node, CAST(NULL AS BIGINT) component WHERE FALSE")
-    return local_dim_df(spark, data, ["node", "component"]).select(
-        F.col("node").cast("long").alias("node"),
-        F.col("component").cast("long").alias("component"),
-    )
+    comp = _union_find((r["u"], r["v"]) for r in rows)
+    return _local_frame(spark, sorted(comp.items()), "node bigint, component bigint")
 
 
 def connected_components(edges: DataFrame, max_iter: int = 25,
@@ -113,15 +142,17 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     as isolated self-loops should not be passed; callers union isolated
     nodes back with component = self.
 
-    Adaptive physical strategy: count the deduped edge set once — small
-    graphs solve on the driver (LocalRelation result, no iteration);
-    large graphs run the alternating-star loop. Pass
+    Adaptive physical strategy, chosen by one job: collect at most
+    ``small_graph_edges + 1`` deduped edges — a graph that fits solves
+    on the driver (LocalRelation result, no iteration); a larger one is
+    checkpointed and runs the alternating-star loop. Pass
     ``small_graph_edges=0`` to force the distributed loop (tests do).
     """
-    e = edges.select("u", "v").where(F.col("u") != F.col("v")).distinct().localCheckpoint()
-    n_edges = e.count()
-    if n_edges <= small_graph_edges:
-        return _driver_cc(e.sparkSession, e.collect())
+    e = edges.select("u", "v").where(F.col("u") != F.col("v")).distinct()
+    head = e.limit(small_graph_edges + 1).collect()
+    if len(head) <= small_graph_edges:
+        return _driver_cc(e.sparkSession, head)
+    e = e.localCheckpoint()
     prev = _edge_checksum(e)
     for _ in range(max_iter):
         e = _small_star(_large_star(e)).localCheckpoint()
@@ -202,14 +233,15 @@ def _entity_node() -> Column:
     return F.xxhash64(F.concat(F.lit("e:"), F.col("entity_id")))
 
 
+def _surface_node() -> Column:
+    return F.xxhash64(F.concat(F.lit("s:"), F.col("surface")))
+
+
 def block_edges(stats: DataFrame) -> DataFrame:
     """Block-graph edges ``(u, v)`` of :func:`link_stats` rows: 64-bit
     hashed node ids, surfaces salted into an id space disjoint from
     entities by a tag prefix."""
-    return stats.select(
-        _entity_node().alias("u"),
-        F.xxhash64(F.concat(F.lit("s:"), F.col("surface"))).alias("v"),
-    )
+    return stats.select(_entity_node().alias("u"), _surface_node().alias("v"))
 
 
 def entity_components(stats: DataFrame, assign: DataFrame) -> DataFrame:
@@ -306,6 +338,57 @@ def canonical_nodes(stats: DataFrame, ent_comp: DataFrame) -> DataFrame:
         .select("entity_id", "canonical_name",
                 F.col("link_kind").alias("kind"), "n_mentions")
     )
+
+
+def _vote_key(item: tuple) -> tuple:
+    """Sort key of a ``(value, count)`` vote: the largest count first,
+    then the smallest value (Python ``str`` order is UTF-8 byte order,
+    Spark's string order), a null value before any other — the order
+    ``min(struct(-count, value))`` of :func:`_vote` takes."""
+    value, count = item
+    return -count, value is not None, value or ""
+
+
+def driver_canonicalize(stats: DataFrame) -> tuple[DataFrame, DataFrame] | None:
+    """Batch canonicalization of a :func:`link_stats` table on the
+    driver: ``(components, nodes)`` with the rows and column types of
+    :func:`canonical_components` and :func:`canonical_nodes`, built
+    from ONE collect, or ``None`` when ``stats`` has more than
+    ``SMALL_GRAPH_EDGES`` rows (the caller then runs the distributed
+    path).
+
+    Spark computes the block-graph ids ``u``/``v`` of each row, so the
+    hash is never re-implemented here; Python runs the same union-find
+    as :func:`connected_components`'s driver path and the three votes of
+    :func:`canonical_nodes` with :func:`_vote`'s tie rule. Both results
+    are LocalRelations, so neither stage runs a further job.
+    """
+    rows = (
+        stats.select("entity_id", "canonical_name", "link_kind", "cnt",
+                     _entity_node().alias("u"), _surface_node().alias("v"))
+        .limit(SMALL_GRAPH_EDGES + 1).collect()
+    )
+    if len(rows) > SMALL_GRAPH_EDGES:
+        return None
+    comp = _union_find((r["u"], r["v"]) for r in rows)
+    node_of = {r["entity_id"]: r["u"] for r in rows}
+    votes: dict[int, tuple[dict, dict, dict]] = {}
+    for r in rows:
+        ballots = votes.setdefault(comp[r["u"]], ({}, {}, {}))
+        for vote, value in zip(ballots, (r["entity_id"], r["canonical_name"],
+                                         r["link_kind"])):
+            vote[value] = vote.get(value, 0) + r["cnt"]
+    spark = stats.sparkSession
+    components = _local_frame(
+        spark,
+        [(e, n, comp[n]) for e, n in node_of.items()],
+        "entity_id string, node bigint, component bigint")
+    nodes = _local_frame(
+        spark,
+        [tuple(min(vote.items(), key=_vote_key)[0] for vote in ballots)
+         + (sum(ballots[0].values()),) for ballots in votes.values()],
+        "entity_id string, canonical_name string, kind string, n_mentions bigint")
+    return components, nodes
 
 
 def entity_canonical_map(

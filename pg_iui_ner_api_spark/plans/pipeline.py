@@ -2,14 +2,18 @@
 
     documents ──extract──> mentions + predicates      (1 corpus scan)
        mentions ──link──> linked_mentions             (broadcast joins)
+       linked ──link_stats──> components, nodes       (one collect: CC +
+                                                       votes on the driver)
        linked + predicates ──assemble──> edges        (co-keyed joins)
-       linked ──link_stats──> components, nodes       (per-entity CC, votes)
 
 The per-document steps live in :func:`graph_increment` and
 :func:`stage_edges`, which the streaming ingest also runs per
-micro-batch; canonicalization reads only ``components.link_stats``,
-which the streaming compactor folds batch by batch into its ``stats``
-+ ``assign`` state.
+micro-batch. Canonicalization reads only ``components.link_stats``: a
+table of at most ``components.SMALL_GRAPH_EDGES`` rows is collected
+once and both the ``components`` and the ``nodes`` stage are built from
+it on the driver; a larger one runs the distributed path. The
+streaming compactor folds the same table batch by batch into its
+``stats`` + ``assign`` state.
 
 Partitioning contract: one explicit doc_id hash partitioning
 (north_rule), placed AFTER the map-only linking stage — extraction and
@@ -114,23 +118,38 @@ def run_kg_pipeline(
     input_fingerprint: str = "",
     doc_partitions: int | None = None,
 ) -> dict[str, DataFrame]:
+    """Stage the KG of ``documents`` through one :class:`StageRunner`
+    (inline when ``workdir`` is None): extraction, linked mentions,
+    ``components``, ``nodes``, ``edges`` and, with a workdir,
+    ``edges_by_subj``. The two canonicalization stages share one cached
+    build (see the module docstring), so a small corpus collects its
+    link statistics once and neither stage runs a further job."""
     runner = StageRunner(spark, workdir, run_id=run_id, input_fingerprint=input_fingerprint)
     n_part = doc_partitions or spark.sparkContext.defaultParallelism
     out = graph_increment(runner, documents, alias_df, entity_emb_df, n_part)
 
     @functools.cache
-    def stats() -> DataFrame:
+    def canon() -> tuple[DataFrame, tuple[DataFrame, DataFrame] | None]:
         # the whole corpus is one delta of the streaming compactor's
-        # fold; one aggregation of linked feeds both canonicalization
-        # stages, and none runs when both resume
-        return C.link_stats(out["linked_mentions"]).localCheckpoint()
+        # fold. One collect of the link statistics builds both
+        # canonicalization stages on the driver when the table is small;
+        # above the bound one checkpoint of it feeds the distributed
+        # path. Nothing runs when both stages resume.
+        stats = C.link_stats(out["linked_mentions"])
+        small = C.driver_canonicalize(stats)
+        return (stats if small else stats.localCheckpoint()), small
 
-    comps = out["components"] = runner.stage(
-        "components", lambda: C.canonical_components(stats()), persist=False)
+    def _components() -> DataFrame:
+        stats, small = canon()
+        return small[0] if small else C.canonical_components(stats)
+
+    def _nodes() -> DataFrame:
+        stats, small = canon()
+        return small[1] if small else C.canonical_nodes(stats, comps)
+
+    comps = out["components"] = runner.stage("components", _components, persist=False)
     out["nodes"] = runner.stage(
-        "nodes", lambda: C.canonical_nodes(stats(), comps),
-        persist=False, bucket_by="entity_id", n_buckets=n_part,
-    )
+        "nodes", _nodes, persist=False, bucket_by="entity_id", n_buckets=n_part)
     out["edges"] = stage_edges(runner, out, n_part)
     if runner.workdir is not None:
         # entity-keyed twin of the edge table: re-bucket (one shuffle at

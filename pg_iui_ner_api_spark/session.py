@@ -134,7 +134,6 @@ def get_spark(
         # the driver heap carries all task memory + caches; sized with a
         # matching -Xms above (fixed heap — see the GC note)
         .config("spark.driver.memory", mem)
-        # executors on a real cluster get the same throughput GC
         # executors on a real cluster get the same GC shape (minus -Xms,
         # which the cluster manager sets via spark.executor.memory)
         .config(

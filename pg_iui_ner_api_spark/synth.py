@@ -306,9 +306,13 @@ def synth_truth_triples(spark, n_docs: int, seed: int = 42, partitions: int | No
 
 
 def _sql_lit(v) -> str:
-    """Render a Python value as a SQL literal (strings, numbers, float lists)."""
+    """Render a Python value as a SQL literal (strings, numbers, float
+    lists, ``None``). Spark SQL string literals unescape backslashes, so
+    ``\\`` is escaped as well as ``'``."""
+    if v is None:
+        return "NULL"
     if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     if isinstance(v, (list, tuple)):
         return "array(" + ",".join(f"CAST({float(x)!r} AS FLOAT)" for x in v) + ")"
     if isinstance(v, float):

@@ -60,6 +60,32 @@ def test_strategies_agree_on_random_graph(spark):
     assert a == b
 
 
+def test_path_choice_runs_one_collect(spark):
+    """Choosing the path is one limited collect of the deduped edges
+    (its distinct's map stage and its result, two Spark jobs); the
+    driver path runs nothing more, and the distributed one starts its
+    loop from a checkpoint of the same edges."""
+    import uuid
+
+    sc = spark.sparkContext
+    # a 60-node ring, every edge twice
+    df = spark.range(0, 120, numPartitions=3).selectExpr(
+        "id % 60 AS u", "(id + 1) % 60 AS v")
+
+    def jobs(small):
+        group = f"cc-{small}-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            out = connected_components(df, small_graph_edges=small)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert {r["component"] for r in out.collect()} == {0}
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(60) == 2
+    assert jobs(59) > 2
+
+
 # ---------------------------------------------------------------------------
 # incremental maintenance: fold an edge delta into an existing assignment
 # ---------------------------------------------------------------------------
@@ -148,15 +174,31 @@ def test_component_stats_star_vs_sparse(spark):
     assert r["max_degree"] == 4 and r["density"] == 0.4
 
 
-def test_canonical_nodes_hand_built_votes(spark):
-    """Node table and entity map over a hand-built linked-mentions frame
-    with hand-written expected rows: a tied entity vote (smaller
-    entity_id wins), a tied name vote (smaller name wins), a component
-    joined only through a shared surface, and n_mentions summed over
-    the component."""
+def _driver_canon(stats):
+    from pg_iui_ner_api_spark.operators.components import driver_canonicalize
+
+    return driver_canonicalize(stats)
+
+
+def _distributed_canon(stats):
     from pg_iui_ner_api_spark.operators.components import (
         canonical_components,
         canonical_nodes,
+    )
+
+    comps = canonical_components(stats)
+    return comps, canonical_nodes(stats, comps)
+
+
+def test_canonical_nodes_hand_built_votes(spark):
+    """Node table and entity map over a hand-built linked-mentions frame
+    with hand-written expected rows, on the driver and the distributed
+    canonicalization path alike: a tied entity vote (smaller entity_id
+    wins), a tied name vote (smaller name wins, in UTF-8 byte order), a
+    null name that ties and wins (a null sorts first), a name with a
+    backslash and a quote, a component joined only through a shared
+    surface, and n_mentions summed over the component."""
+    from pg_iui_ner_api_spark.operators.components import (
         entity_canonical_map,
         link_stats,
     )
@@ -174,23 +216,51 @@ def test_canonical_nodes_hand_built_votes(spark):
             (6, "Q5", "Paname", "City of Paris", "LOC"),
             (7, "Q4", "paname", "Paname", "LOC"),
             (8, "Q9", "Bob", "Bob", "PER"),
+            (9, "Q3", "ACDC", "AC\\DC's", "ORG"),
+            # "Lodz" (0x4C) sorts before "Łódź" (0xC5 0x81) in UTF-8
+            (10, "Q7", "Lodz", "Łódź", "LOC"),
+            (11, "Q7", "LODZ", "Lodz", "LOC"),
+            (12, "Q8", "Krakow", None, "LOC"),
+            (13, "Q8", "Cracow", "Kraków", "LOC"),
         ],
         "mention_id long, entity_id string, word string, "
         "canonical_name string, link_kind string",
     ).repartition(3)
     stats = link_stats(lm)
-    comps = canonical_components(stats)
-    assert comps.columns == ["entity_id", "node", "component"]
-    assert comps.count() == 5
-    nodes = canonical_nodes(stats, comps)
-    assert sorted(tuple(r) for r in nodes.collect()) == [
-        ("Q1", "Acme Corp", "ORG", 2),
-        ("Q5", "City of Paris", "LOC", 5),
-        ("Q9", "Bob", "PER", 1),
-    ]
-    got = {r.entity_id: r.canonical_id
-           for r in entity_canonical_map(lm, comps).collect()}
-    assert got == {"Q1": "Q1", "Q2": "Q1", "Q4": "Q5", "Q5": "Q5", "Q9": "Q9"}
+    for canon in (_driver_canon, _distributed_canon):
+        comps, nodes = canon(stats)
+        assert comps.dtypes == [
+            ("entity_id", "string"), ("node", "bigint"), ("component", "bigint")]
+        assert comps.count() == 8, canon
+        assert nodes.dtypes == [("entity_id", "string"), ("canonical_name", "string"),
+                                ("kind", "string"), ("n_mentions", "bigint")]
+        assert sorted(tuple(r) for r in nodes.collect()) == [
+            ("Q1", "Acme Corp", "ORG", 2),
+            ("Q3", "AC\\DC's", "ORG", 1),
+            ("Q5", "City of Paris", "LOC", 5),
+            ("Q7", "Lodz", "LOC", 2),
+            ("Q8", None, "LOC", 2),
+            ("Q9", "Bob", "PER", 1),
+        ], canon
+        got = {r.entity_id: r.canonical_id
+               for r in entity_canonical_map(lm, comps).collect()}
+        assert got == {"Q1": "Q1", "Q2": "Q1", "Q3": "Q3", "Q4": "Q5", "Q5": "Q5",
+                       "Q7": "Q7", "Q8": "Q8", "Q9": "Q9"}, canon
+
+
+def test_driver_canonicalization_above_bound_returns_none(spark, monkeypatch):
+    """The driver path declines a statistics table of more than
+    ``SMALL_GRAPH_EDGES`` rows and takes one of exactly that many."""
+    from pg_iui_ner_api_spark.operators import components as C
+
+    stats = C.link_stats(spark.createDataFrame(
+        [(1, "Q1", "a", "A", "ORG"), (2, "Q2", "b", "B", "ORG")],
+        "mention_id long, entity_id string, word string, "
+        "canonical_name string, link_kind string"))
+    monkeypatch.setattr(C, "SMALL_GRAPH_EDGES", 1)
+    assert C.driver_canonicalize(stats) is None
+    monkeypatch.setattr(C, "SMALL_GRAPH_EDGES", 2)
+    assert C.driver_canonicalize(stats)[1].count() == 2
 
 
 def test_fold_components_two_deltas_equal_one(spark):

@@ -4,7 +4,8 @@ mode: inline, workdir, and two-batch streaming ingest + compaction.
 Compares order-independent checksums (row count + the sum of each row's
 ``xxhash64`` as ``decimal(20,0)``) of linked mentions, edges, components
 and nodes across ``doc_partitions`` ∈ {1, 3, 8} and
-``spark.sql.shuffle.partitions`` ∈ {1, 5, 32}. A row that depends on
+``spark.sql.shuffle.partitions`` ∈ {1, 5, 32}, on both the driver and
+the distributed canonicalization path. A row that depends on
 partition order anywhere on the path changes a checksum; a tie broken
 by partition order shows only where the corpus has the tie, and this
 corpus has no tied canonical-node vote.
@@ -71,7 +72,8 @@ def _stream(spark, docs, root):
     }
 
 
-def test_graph_checksums_invariant_to_partitioning_and_mode(spark, tmp_path):
+def test_graph_checksums_invariant_to_partitioning_and_mode(spark, tmp_path,
+                                                          monkeypatch):
     docs = synth.synth_documents(spark, N_DOCS, partitions=2).cache()
     try:
         runs = {
@@ -79,6 +81,11 @@ def test_graph_checksums_invariant_to_partitioning_and_mode(spark, tmp_path):
                 spark, sp, lambda dp=dp: _batch(spark, docs.repartition(dp), dp))
             for dp, sp in ((1, 1), (3, 5), (8, 32))
         }
+        with monkeypatch.context() as m:
+            # bound 0: the distributed canonicalization path
+            m.setattr(C, "SMALL_GRAPH_EDGES", 0)
+            runs["inline distributed canonicalization shuffle=5"] = _with_shuffle(
+                spark, 5, lambda: _batch(spark, docs, 3))
         runs["workdir doc_partitions=3 shuffle=32"] = _with_shuffle(
             spark, 32, lambda: _batch(spark, docs, 3, str(tmp_path / "wd")))
         runs["stream+compaction shuffle=5"] = _with_shuffle(

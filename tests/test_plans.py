@@ -535,3 +535,65 @@ def test_rule_mining_plan_jvm_only(spark):
     # body distinct shuffles the hashed pair key, never raw entity ids:
     # the aggregate output carries xh/yh longs
     assert "xh" in plan and "yh" in plan
+
+
+# One inline run_kg_pipeline + noop sink of edges and nodes over the
+# 300-doc synth corpus (this session: local[4], 4 shuffle partitions)
+# ran this many Spark jobs when canonicalization ran as Spark jobs.
+KG_JOBS_DISTRIBUTED_CANON = 28
+
+
+def _jobs_in_group(spark, group: str) -> int:
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def test_kg_pipeline_job_count(spark, monkeypatch):
+    """Canonicalization of a small link-statistics table runs on the
+    driver: one inline run + sink runs at most half the jobs of the
+    distributed path, and the ``components`` and ``nodes`` stages
+    together run only the statistics collect (its aggregation's map
+    stage and its result)."""
+    import uuid
+
+    from pg_iui_ner_api_spark.plans import lineage
+    from pg_iui_ner_api_spark.plans.pipeline import run_kg_pipeline
+
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+    docs = synth.synth_documents(spark, 300, partitions=2).cache()
+    docs.count()
+
+    def sink(res):
+        for t in ("edges", "nodes"):
+            res[t].write.format("noop").mode("overwrite").save()
+
+    group = f"kg-{tag}"
+    sc.setJobGroup(group, group)
+    try:
+        res = run_kg_pipeline(spark, docs)
+        sink(res)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    res["_runner"].unpersist()
+    assert _jobs_in_group(spark, group) <= KG_JOBS_DISTRIBUTED_CANON // 2
+
+    # per stage: each stage's own jobs under a group of its name, with
+    # every persisted stage materialized before the next one is built
+    orig = lineage.StageRunner.stage
+
+    def stage(runner, name, build, **kw):
+        sc.setJobGroup(f"{name}-{tag}", name)
+        df = orig(runner, name, build, **kw)
+        if kw.get("persist", True):
+            df.write.format("noop").mode("overwrite").save()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        return df
+
+    monkeypatch.setattr(lineage.StageRunner, "stage", stage)
+    res = run_kg_pipeline(spark, docs)
+    monkeypatch.undo()
+    sink(res)
+    res["_runner"].unpersist()
+    docs.unpersist()
+    assert _jobs_in_group(spark, f"components-{tag}") == 2
+    assert _jobs_in_group(spark, f"nodes-{tag}") == 0

@@ -1,0 +1,19 @@
+"""``synth.local_dim_df``: a VALUES-literal LocalRelation returns every
+cell it is given, whatever the characters or bounds."""
+
+from pg_iui_ner_api_spark.synth import local_dim_df
+
+
+def test_local_dim_df_round_trips_cells(spark):
+    rows = [
+        ("it's", -(2 ** 63)),
+        ("AC\\DC", 2 ** 63 - 1),
+        ("x\\ny", 0),
+        ("x\ny", None),
+        ("Łódź", 1),
+        (None, 2),
+        ("\\'", -1),
+    ]
+    df = local_dim_df(spark, rows, ["s", "n"])
+    assert df.dtypes == [("s", "string"), ("n", "bigint")]
+    assert [tuple(r) for r in df.collect()] == rows

@@ -15,6 +15,7 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -81,7 +82,13 @@ def main() -> int:
     only = set(sys.argv[2:])
     spark = get_spark(app_name="check_entry", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
+    # bounded: an oversized oracle spills (at most 8 GB of disk) or
+    # fails its own key, never the whole sweep (the graph_ktruss twin
+    # took 12.7 GiB of memory at sf0.01 without a limit)
+    spill = tempfile.TemporaryDirectory(prefix="check_entry_duckdb_")
+    con = duckdb.connect(config={"memory_limit": "4GB",
+                                 "temp_directory": spill.name,
+                                 "max_temp_directory_size": "8GB"})
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
@@ -133,6 +140,8 @@ def main() -> int:
         else:
             print(f"ok   {name}: {len(rows)} rows match ({dt:.1f}s)")
     print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
+    con.close()
+    spill.cleanup()
     return 1 if failures else 0
 
 
