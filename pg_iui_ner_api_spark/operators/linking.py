@@ -1,34 +1,53 @@
 """Entity linking: candidate generation + embedding rerank (SURVEY.md J3/M5).
 
-Stage shape (map-only, no shuffle):
+Stage shape (map-only, no join, no exchange):
 
-    mentions  ⋈ broadcast(candidates per lower(alias))             # J3
-      emb_sim = cosine(encode(ctx), entity_emb)   # Arrow-batched
-                vectorized pandas UDF; entity matrix held per worker
-      score   = 0.7*emb_sim + 0.3*prior
-      link    = array_max over the scored candidates (entity_id tie-break)
+    dims     ──toArrow──> prepared dimension, one broadcast per call
+    mentions ──arrow_udf(lower(word), ctx)──> best candidate   # one crossing
+      candidates = the alias rows of lower(word)   (hash lookup in-batch)
+      emb_sim    = cosine(BoW(ctx), entity_emb)    (per distinct ctx)
+      score      = 0.7*emb_sim + 0.3*prior
+      link       = segmented argmax, array_max's (score, entity_id,
+                   link_kind, canonical_name) order
 
 Scale properties:
 
   * The alias dictionary and entity-embedding table are small dimensions
-    (≤ millions of rows in production): both join broadcast, so the
-    100 TB mention table never shuffles here.
-  * Each mention row scores its candidate array in-row and drops ``ctx``
-    on the way out. No embedding vector is ever shuffled or
+    (≤ millions of rows in production). Each call collects both once as
+    Arrow and broadcasts one prepared dimension: the L2-normalized entity
+    matrix, the alias rows grouped by lowered surface, and a tie rank.
+    The mention table never shuffles or joins here.
+  * Each Arrow batch gathers its mentions' candidates flat, scores them
+    in one vectorized pass and returns the winner, dropping ``ctx`` on
+    the way out. No embedding vector is ever shuffled or
     Arrow-transferred — the stand-in encoder is a BoW over the context,
-    and a real transformer encoder would slot in as an Arrow-batched
-    scalar-iterator pandas UDF at the same seam (per-worker model
-    singleton, cf. operators/tagger.HFTagger).
-  * AQE skew-join splitting covers hub surfaces ('Acme') in the
-    candidate join.
+    and a real transformer encoder would slot in at the same seam
+    (per-worker model singleton, cf. operators/tagger.HFTagger).
 """
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.functions import arrow_udf
 
 from ..synth import VOCAB
+
+# entity dims up to this size score through one BLAS matmul per batch;
+# larger ones gather only the referenced (context, entity) pairs
+MATMUL_MAX_ENTITIES = 4096
+
+# the scorer's struct fields, in array_max's comparison order, and the
+# order link_mentions appends them in
+_LINK = ("link_score", "entity_id", "link_kind", "canonical_name")
+_OUT = ("entity_id", "link_kind", "canonical_name", "link_score")
+_SCORED = ("struct<link_score double, entity_id string, link_kind string,"
+           " canonical_name string>")
 
 
 def _bow_count_matrix(ctx_list, vocab, V):
@@ -43,8 +62,6 @@ def _bow_count_matrix(ctx_list, vocab, V):
     Returns (C_uniq, norms_uniq, inv) with C_uniq[inv[i]] the BoW row
     of ctx_list[i]."""
     import re
-
-    import numpy as np
 
     texts = np.array(
         [c.lower() if c is not None else "" for c in ctx_list], dtype=object
@@ -72,33 +89,22 @@ def _bow_count_matrix(ctx_list, vocab, V):
     return C, norms, inv
 
 
-def _entity_matrix(emb_map):
-    """n_e x V matrix from the broadcast dict, one row per entity in
-    sorted id order."""
-    import numpy as np
-
-    ids = sorted(emb_map)
-    return np.stack([emb_map[e] for e in ids]) if ids else np.zeros((0, 1))
-
-
 def _cosine_rows(C, norms, emb_mat, rows_flat, eidx_flat):
     """cos(context BoW of distinct-ctx row ``rows_flat[i]``, embedding
     column ``eidx_flat[i]``) for every flattened (row, candidate) pair.
     ``eidx_flat`` holds PRE-RESOLVED embedding column indexes (-1 =
     unknown entity) — the string->index lookup happens once at dim build
-    time JVM-side, so no per-candidate dict access or string transfer
-    here. Small entity dims go through one BLAS matmul (rows x V @
-    V x n_e); large dims gather only the referenced pairs."""
-    import numpy as np
-
+    time, so no per-candidate dict access or string transfer here.
+    Entity dims up to ``MATMUL_MAX_ENTITIES`` go through one BLAS matmul
+    (rows x V @ V x n_e); larger ones gather only the referenced pairs."""
     eidx = np.asarray(eidx_flat, dtype=np.int64)
     known = eidx >= 0
     safe_norm = np.where(norms > 0, norms, 1.0)
     sims = np.zeros(len(eidx))
-    if emb_mat.shape[0] <= 4096:
+    if emb_mat.shape[0] <= MATMUL_MAX_ENTITIES:
         P = (C @ emb_mat.T) / safe_norm[:, None]
         sims[known] = P[rows_flat[known], eidx[known]]
-    else:  # pragma: no cover - production-size dim path, same math
+    else:
         r, e = rows_flat[known], eidx[known]
         sims[known] = np.einsum("ij,ij->i", C[r], emb_mat[e]) / safe_norm[r]
     sims[norms[rows_flat] == 0] = 0.0
@@ -132,10 +138,11 @@ def fuzzy_candidates(mentions: DataFrame, alias_df: DataFrame,
     BUILD TIME (|alias|·(len+1) rows — still dim-sized, still
     broadcast); only mentions with NO exact hit (the OOV minority) take
     the fuzzy path, exploding in-row to |word|+1 variants before the
-    broadcast join, with an exact ``levenshtein`` verify and a
-    dropDuplicates on (mention_id, entity_id). The corpus-side shuffle
-    this dedupe costs is over the OOV slice only; exact-hit mentions
-    stay map-only.
+    broadcast join, with an exact ``levenshtein`` verify and one row
+    per (mention_id, entity_id): the one with the smallest (alias, kind,
+    canonical_name, prior), whatever the input order. The corpus-side
+    shuffle this dedupe costs is over the OOV slice only; exact-hit
+    mentions stay map-only.
     """
     from .similarity import _deletion_variants
 
@@ -157,130 +164,210 @@ def fuzzy_candidates(mentions: DataFrame, alias_df: DataFrame,
     m_var = oov.withColumn(
         "var", F.explode(_deletion_variants(F.lower("word")))
     )
-    fuzzy = (
+    hits = (
         m_var.join(var_dim, "var")
         .where(F.levenshtein(F.lower("word"), F.col("alias_norm")) <= 1)
         .drop("var")
-        .dropDuplicates(["mention_id", "entity_id"])
+    )
+    key = ["mention_id", "entity_id"]
+    pick = ["alias", "kind", "canonical_name", "prior"]
+    rest = [c for c in hits.columns if c not in key + pick]
+    fuzzy = (
+        hits.groupBy(*key)
+        .agg(F.min(F.struct(*pick, *rest)).alias("_w"))
+        .select(*key, "_w.*")
         .withColumn("match_dist", F.lit(1))
     )
     return exact.unionByName(fuzzy.select(*exact.columns))
 
 
-def _with_scored(
-    mentions: DataFrame, alias_df: DataFrame, entity_emb_df: DataFrame
-) -> DataFrame:
-    """Shared core of :func:`link_mentions` / :func:`scored_candidates`:
-    the mention rows joined to the broadcast candidate dim with a
-    ``scored`` array column — one struct (link_score, entity_id,
-    link_kind, canonical_name) per candidate, link_score = 0.7 *
-    ctx-BoW cosine + 0.3 * prior, the cosine computed ONCE per mention
-    in one Arrow crossing. Map-only."""
-    import numpy as np
+class _Dim(NamedTuple):
+    """The linking dimensions prepared for the scorer. Candidate rows are
+    grouped by lowered surface: those of ``surfaces[i]`` are rows
+    ``offsets[i]:offsets[i + 1]`` of the per-candidate columns."""
 
-    emb_map = {}
-    for r in entity_emb_df.collect():
-        v = np.asarray(r["emb"], dtype=np.float64)
-        emb_map[r["entity_id"]] = v / (np.linalg.norm(v) or 1.0)
-    bc_emb = entity_emb_df.sparkSession.sparkContext.broadcast(emb_map)
-    # resolve entity_id -> embedding-matrix column ONCE at dim-build time
-    # (same sorted order as _entity_matrix): candidate arrays then carry
-    # small ints through Arrow instead of id strings, and the UDF does
-    # zero per-candidate dict lookups. -1 = entity without an embedding
-    # (scores 0.0, exactly as the old id-string miss path did).
-    from ..synth import local_dim_df
+    surfaces: pa.Array       # distinct lower(alias)
+    offsets: np.ndarray      # int64, len(surfaces) + 1
+    eidx: np.ndarray         # int64 row of ``emb``, -1 = no embedding
+    prior: np.ndarray        # float64, NaN where null
+    prior_ok: np.ndarray     # bool, prior not null
+    rank: np.ndarray         # int64 position in (entity_id, link_kind,
+                             # canonical_name) order, nulls first
+    entity_id: pa.Array
+    link_kind: pa.Array
+    canonical_name: pa.Array
+    emb: np.ndarray          # L2-normalized, one row per entity id, sorted
 
-    spark = entity_emb_df.sparkSession
-    idx_dim = F.broadcast(
-        local_dim_df(
-            spark, [(e, i) for i, e in enumerate(sorted(emb_map))],
-            ["entity_id", "eidx"],
-        ).select("entity_id", F.col("eidx").cast("int").alias("eidx"))
-    )
-    cand_dim = F.broadcast(
-        alias_df.join(idx_dim, "entity_id", "left")
-        .na.fill({"eidx": -1})
-        .groupBy(F.lower("alias").alias("alias_norm")).agg(
-            F.collect_list(
-                F.struct("entity_id", "kind", "canonical_name", "prior", "eidx")
-            ).alias("cands")
+
+def _prepare(alias_df: DataFrame, entity_emb_df: DataFrame):
+    """Collect both dimensions once as Arrow and broadcast them as one
+    :class:`_Dim`. Spark lowers the aliases, so Python's ``str.lower``
+    never decides a match; Arrow sorts and ranks the strings in UTF-8
+    byte order, as Spark compares them."""
+    et = entity_emb_df.select("entity_id", "emb").toArrow()
+    ids = et.column("entity_id").to_numpy()
+    emb = et.column("emb").combine_chunks()
+    lens = pc.list_value_length(emb).to_numpy(zero_copy_only=False)
+    V = int(lens[0]) if len(lens) else 0
+    if not (lens == V).all():
+        raise ValueError("every entity embedding must have the same length")
+    mat = pc.list_flatten(emb).to_numpy(zero_copy_only=False)
+    mat = mat.astype(np.float64).reshape(len(lens), V)
+    known = ~pd.isna(ids)
+    ent_ids, first = np.unique(ids[known], return_index=True)
+    mat = mat[known][first]
+    norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
+    mat = mat / np.where(norms > 0, norms, 1.0)[:, None]
+
+    at = (
+        alias_df.select(
+            F.lower("alias").alias("surface"),
+            "entity_id",
+            F.col("kind").alias("link_kind"),
+            "canonical_name",
+            F.col("prior").cast("double").alias("prior"),
         )
+        .where(F.col("surface").isNotNull())
+        .toArrow()
     )
+    at = at.take(pc.sort_indices(at, sort_keys=[("surface", "ascending")]))
+    at = at.cast(pa.schema([(c, pa.float64() if c == "prior" else pa.string())
+                            for c in at.column_names]))
+    surf = at.column("surface").to_numpy()
+    # first row of each surface's run (none when there are no aliases)
+    starts = np.flatnonzero(np.r_[True, surf[1:] != surf[:-1]])[: len(surf)]
+    order = pc.sort_indices(
+        at, sort_keys=[("entity_id", "ascending"), ("link_kind", "ascending"),
+                       ("canonical_name", "ascending")],
+        null_placement="at_start",
+    ).to_numpy()
+    rank = np.empty(len(order), np.int64)
+    rank[order] = np.arange(len(order))
+    col = {c: at.column(c).combine_chunks() for c in at.column_names}
+    dim = _Dim(
+        surfaces=pa.array(surf[starts], pa.string()),
+        offsets=np.r_[starts, len(surf)].astype(np.int64),
+        eidx=pc.fill_null(
+            pc.index_in(col["entity_id"], value_set=pa.array(ent_ids, pa.string())), -1
+        ).to_numpy().astype(np.int64),
+        prior=col["prior"].to_numpy(zero_copy_only=False).astype(np.float64),
+        prior_ok=col["prior"].is_valid().to_numpy(zero_copy_only=False),
+        rank=rank,
+        entity_id=col["entity_id"],
+        link_kind=col["link_kind"],
+        canonical_name=col["canonical_name"],
+        emb=mat,
+    )
+    return entity_emb_df.sparkSession.sparkContext.broadcast(dim)
+
+
+def _scatter(values: np.ndarray, where: np.ndarray) -> np.ndarray:
+    """``values`` placed at the True positions of ``where``, zeros elsewhere."""
+    out = np.zeros(len(where), values.dtype)
+    out[where] = values
+    return out
+
+
+def _scorer(bc_dim, best: bool):
+    """The one Arrow UDF of the stage, ``(lower(word), ctx)`` -> the
+    scored candidates of each mention, null for a surface with none:
+    the winner as a ``_SCORED`` struct (``best``), or every candidate as
+    an array of them. Per batch: one flat gather of the candidates, one
+    BoW row per distinct ctx, :func:`_cosine_rows`, ``0.7 * sim + 0.3 *
+    prior``, and for ``best`` a segmented argmax in array_max's order —
+    larger score, then entity_id, link_kind, canonical_name, a null
+    field first. Nondeterministic in Spark's eyes only, so that the
+    optimizer never pushes the caller's null filter below the
+    projection, which would run the UDF twice."""
     vocab = dict(VOCAB)
-    holder: dict = {}  # per-worker entity matrix cache
 
-    @F.pandas_udf("array<double>")
-    def bow_cos_multi(ctx: pd.Series, eidxs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        if "mat" not in holder:
-            holder["mat"] = _entity_matrix(bc_emb.value)
-        mat = holder["mat"]
-        V = mat.shape[1]
-        es_list = eidxs.tolist()
-        if not es_list:
-            return pd.Series([], dtype=object)
-        n_cands = np.fromiter(
-            (0 if es is None else len(es) for es in es_list),
-            np.int64, count=len(es_list),
+    def score(surface: pa.Array, ctx: pa.Array) -> pa.Array:
+        d = bc_dim.value
+        g = pc.fill_null(pc.index_in(surface, value_set=d.surfaces), -1)
+        g = g.to_numpy().astype(np.int64)
+        has = g >= 0
+        gh = g[has]
+        n_c = d.offsets[gh + 1] - d.offsets[gh]
+        # flat gather: the candidate rows of every mention that has any,
+        # mention by mention; ``ends`` closes each mention's segment
+        ends = np.cumsum(n_c)
+        pos = np.arange(ends[-1] if len(ends) else 0) + np.repeat(
+            d.offsets[gh] - (ends - n_c), n_c
         )
-        C, norms, inv = _bow_count_matrix(ctx.tolist(), vocab, V)
-        rows_flat = np.repeat(inv, n_cands)
-        flat_eidx = np.fromiter(
-            (e for es in es_list if es is not None for e in es),
-            np.int64, count=int(n_cands.sum()),
+        C, norms, inv = _bow_count_matrix(
+            ctx.filter(pa.array(has)).to_pylist(), vocab, d.emb.shape[1]
         )
-        sims = _cosine_rows(C, norms, mat, rows_flat, flat_eidx)
-        return pd.Series(np.split(sims, np.cumsum(n_cands)[:-1]))
+        sims = _cosine_rows(C, norms, d.emb, np.repeat(inv, n_c), d.eidx[pos])
+        link_score = 0.7 * sims + 0.3 * d.prior[pos]
+        ok = d.prior_ok[pos]
+        if best:
+            seg = np.repeat(np.arange(len(gh)), n_c)
+            win = np.lexsort((d.rank[pos], link_score, ok, seg))[ends - 1]
+            pos = pa.array(_scatter(pos[win], has), mask=~has)
+            link_score = _scatter(link_score[win], has)
+            ok = _scatter(ok[win], has)
+        fields = [pa.array(link_score, pa.float64(), mask=~ok),
+                  d.entity_id.take(pos), d.link_kind.take(pos),
+                  d.canonical_name.take(pos)]
+        if best:
+            return pa.StructArray.from_arrays(fields, names=_LINK, mask=pa.array(~has))
+        return pa.ListArray.from_arrays(
+            pa.array(np.r_[0, np.cumsum(_scatter(n_c, has))].astype(np.int32)),
+            pa.StructArray.from_arrays(fields, names=_LINK),
+            mask=pa.array(~has),
+        )
 
-    with_cands = mentions.join(
-        cand_dim, F.lower(mentions.word) == cand_dim.alias_norm, "inner"
+    ret = _SCORED if best else f"array<{_SCORED}>"
+    return arrow_udf(score, ret).asNondeterministic()
+
+
+def _link(mentions: DataFrame, bc_dim) -> DataFrame:
+    """:func:`link_mentions` over a prepared dimension."""
+    cols = [c for c in mentions.columns if c != "ctx"]
+    return (
+        mentions.withColumn("_best", _scorer(bc_dim, True)(F.lower("word"), "ctx"))
+        .where(F.col("_best").isNotNull())
+        .select(*cols, *[f"_best.{c}" for c in _OUT])
     )
-    sims = bow_cos_multi("ctx", F.col("cands.eidx"))
-    scored = F.zip_with(
-        "cands", sims,
-        lambda cand, sim: F.struct(
-            (0.7 * sim + 0.3 * cand["prior"]).alias("link_score"),
-            cand["entity_id"].alias("entity_id"),
-            cand["kind"].alias("link_kind"),
-            cand["canonical_name"].alias("canonical_name"),
-        ),
+
+
+def _with_scored(mentions: DataFrame, bc_dim) -> DataFrame:
+    """The mention rows that have at least one candidate, with a
+    ``scored`` array column: one ``_SCORED`` struct per candidate,
+    scored exactly as :func:`link_mentions` scores it. Map-only."""
+    scored = _scorer(bc_dim, False)(F.lower("word"), "ctx")
+    return mentions.withColumn("scored", scored).where(F.col("scored").isNotNull())
+
+
+def _candidate_rows(mentions: DataFrame, bc_dim) -> DataFrame:
+    """:func:`scored_candidates` over a prepared dimension."""
+    return (
+        _with_scored(mentions, bc_dim)
+        .select("*", F.explode("scored").alias("c"))
+        .drop("ctx", "scored")
+        .select("*", *[f"c.{c}" for c in _OUT])
+        .drop("c")
     )
-    return with_cands.withColumn("scored", scored).drop("alias_norm", "cands")
 
 
 def link_mentions(mentions: DataFrame, alias_df: DataFrame, entity_emb_df: DataFrame) -> DataFrame:
     """mentions + alias dict + embeddings -> linked mentions, MAP-ONLY.
 
-    Returns the mention rows augmented with (entity_id, canonical_name,
-    link_kind, link_score); mentions whose surface is out-of-dictionary
-    are dropped (NIL linking — same behavior as the reference, which only
-    ever emits entities its label space knows). The ctx column is
-    consumed here and dropped from the output — downstream stages never
-    carry it.
+    Returns the mention rows augmented with (entity_id, link_kind,
+    canonical_name, link_score); mentions whose surface is
+    out-of-dictionary are dropped (NIL linking — same behavior as the
+    reference, which only ever emits entities its label space knows).
+    The ctx column is consumed here and dropped from the output —
+    downstream stages never carry it.
 
-    Plan shape (round 2): a surface has only a handful of candidate
-    entities, so the alias dict is pre-grouped per normalized surface
-    into a candidate ARRAY and broadcast; each mention row then scores
-    its candidates in-row (one Arrow crossing computes the BoW context
-    vector ONCE per mention and dots it against every candidate) and
-    takes the argmax with array_max — same (link_score, entity_id) tie
-    rule as the old max_by. ZERO shuffles: round 1 shuffled the corpus
-    twice here (groupBy(mention_id) argmax + join-back), which at 10^12
-    documents was the pipeline's largest avoidable exchange. Measured at
-    1M docs: linking stage 45.2 s -> map-only (see BASELINE.md r2).
+    Plan shape: the dimensions are prepared once per call (see
+    :func:`_prepare`) and one Arrow UDF scores every candidate of a
+    mention and returns the winner (:func:`_scorer`), so the plan is
+    the mention scan, one ArrowEvalPython and a null filter: no join
+    and ZERO exchanges. The ``(link_score, entity_id)`` tie rule is the
+    one ``array_max`` gave when the candidates were struct arrays.
     """
-    best = F.array_max(F.col("scored"))
-    return (
-        _with_scored(mentions, alias_df, entity_emb_df)
-        .withColumn("best", best)
-        .drop("ctx", "scored")
-        .withColumn("entity_id", F.col("best.entity_id"))
-        .withColumn("link_kind", F.col("best.link_kind"))
-        .withColumn("canonical_name", F.col("best.canonical_name"))
-        .withColumn("link_score", F.col("best.link_score"))
-        .drop("best")
-    )
+    return _link(mentions, _prepare(alias_df, entity_emb_df))
 
 
 def scored_candidates(
@@ -292,16 +379,7 @@ def scored_candidates(
     (mention, candidate). Still map-only — the explode is in-row and
     the fan-out is the per-surface candidate count (a handful). The
     collective linker's candidate surface."""
-    return (
-        _with_scored(mentions, alias_df, entity_emb_df)
-        .select("*", F.explode("scored").alias("c"))
-        .drop("ctx", "scored")
-        .withColumn("entity_id", F.col("c.entity_id"))
-        .withColumn("link_kind", F.col("c.link_kind"))
-        .withColumn("canonical_name", F.col("c.canonical_name"))
-        .withColumn("link_score", F.col("c.link_score"))
-        .drop("c")
-    )
+    return _candidate_rows(mentions, _prepare(alias_df, entity_emb_df))
 
 
 # ---------------------------------------------------------------------------
@@ -469,7 +547,7 @@ def link_mentions_coherent(
 ) -> DataFrame:
     """Two-pass COLLECTIVE linking: the production wiring of
     :func:`coherence_rerank`. Pass 1 runs the independent
-    :func:`link_mentions` (broadcast candidates + ctx-BoW rerank); its
+    :func:`link_mentions` (prepared dimension + ctx-BoW rerank); its
     document-level co-linked entity graph — which entities pass 1
     placed together in documents, hub-capped — becomes the relatedness
     prior; pass 2 reranks every mention's candidates by
@@ -494,13 +572,14 @@ def link_mentions_coherent(
     """
     from .graph import cooccurrence_edges
 
-    pass1 = link_mentions(mentions, alias_df, entity_emb_df)
+    bc_dim = _prepare(alias_df, entity_emb_df)
+    pass1 = _link(mentions, bc_dim)
     ent_edges = cooccurrence_edges(
         pass1.select("doc_id", "entity_id"), "doc_id", "entity_id",
         max_group=max_doc_entities,
     ).select(F.col("src").alias("u"), F.col("dst").alias("v"))
 
-    cands = scored_candidates(mentions, alias_df, entity_emb_df)
+    cands = _candidate_rows(mentions, bc_dim)
     slim = (
         cands.groupBy("doc_id", "mention_id", "entity_id")
         .agg(F.max("link_score").alias("prior"))

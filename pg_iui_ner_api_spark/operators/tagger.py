@@ -142,9 +142,10 @@ class GazetteerTagger:
             # clipped to the mention's sentence (a whole-sentence or
             # cross-sentence context leaks the *other* relation
             # argument's descriptor and flips ambiguous links). Emitted
-            # as a short STRING — the embedding itself is computed
-            # JVM-side in the link stage (operators/linking.py), so no
-            # float array ever crosses the Arrow boundary or shuffles.
+            # as a short STRING — the BoW context vector is computed
+            # inside the link stage's Arrow UDF (operators/linking.py),
+            # so no float array ever crosses the Arrow boundary or
+            # shuffles.
             s_lo = bounds[sid - 1] if sid > 0 else 0
             s_hi = bounds[sid] if sid < len(bounds) else len(text)
             lo = max(s_lo, m.start() - CTX_WINDOW)

@@ -1,4 +1,4 @@
-"""Entity-linking tests: broadcast candidate gen + embedding rerank,
+"""Entity-linking tests: candidate gen + embedding rerank,
 including the ambiguous-alias case the rerank exists for."""
 
 import pyspark.sql.functions as F
@@ -328,3 +328,154 @@ def test_coherent_linking_duplicate_alias_is_deterministic(spark):
     paris = [r for r in one if r[9] == "LOC:paris"]
     assert paris and all(r[11] == "City of Paris" for r in paris)
     m.unpersist()
+
+
+_HAND_ALIASES = [
+    ("Twin", "E:a", "ORG", "A", 0.5),
+    ("Twin", "E:b", "ORG", "B", 0.5),
+    ("Dup", "E:d", None, "Dup Co", 0.5),
+    ("Dup", "E:d", "ORG", None, 0.5),
+    ("Nul", "E:z", "ORG", "Z", None),
+    ("Nul", "E:n", "ORG", "N", 0.1),
+    ("Only", "E:o", "LOC", "O", None),
+    ("Lodz", "LOC:Lodz", "LOC", "Lodz", 0.5),
+    ("Lodz", "LOC:Łódź", "LOC", "Łódź", 0.5),
+]
+
+
+def _hand_dims(spark):
+    """Hand-built dimensions whose contexts share no vocabulary token with
+    any embedding, so every cosine is 0 and link_score = 0.3 * prior:
+    the argmax is decided by the priors and the tie rule alone. Losers
+    are listed before winners, so a first-max argmax picks them."""
+    embs = [(e, [1.0, 0.5, 0.0, 0.25])
+            for e in sorted({a[1] for a in _HAND_ALIASES})]
+    return (
+        synth.local_dim_df(spark, _HAND_ALIASES,
+                           ["alias", "entity_id", "kind", "canonical_name", "prior"]),
+        synth.local_dim_df(spark, embs, ["entity_id", "emb"]),
+    )
+
+
+def test_link_mentions_tie_rule_on_hand_built_dims(spark):
+    """The argmax keeps array_max's order over (link_score, entity_id,
+    link_kind, canonical_name): a larger score wins, a tie goes to the
+    larger entity_id, then link_kind, then canonical_name in UTF-8 byte
+    order, and a null field sorts first (a null prior gives a null score,
+    which loses to every non-null one). A surface with no candidate is
+    dropped; a lower-cased surface still matches."""
+    alias, embs = _hand_dims(spark)
+    words = ["TWIN", "Dup", "Nul", "Only", "Lodz", "Ghost"]
+    mentions = spark.createDataFrame(
+        [(f"m{i}", w, "zzz qqq") for i, w in enumerate(words)],
+        "mention_id string, word string, ctx string",
+    )
+    linked = linking.link_mentions(mentions, alias, embs)
+    assert linked.columns == ["mention_id", "word", "entity_id", "link_kind",
+                              "canonical_name", "link_score"]
+    got = {r["word"]: tuple(r)[2:] for r in linked.collect()}
+    assert got == {
+        "TWIN": ("E:b", "ORG", "B", 0.7 * 0.0 + 0.3 * 0.5),
+        "Dup": ("E:d", "ORG", None, 0.7 * 0.0 + 0.3 * 0.5),
+        "Nul": ("E:n", "ORG", "N", 0.7 * 0.0 + 0.3 * 0.1),
+        "Only": ("E:o", "LOC", "O", None),
+        "Lodz": ("LOC:Łódź", "LOC", "Łódź", 0.7 * 0.0 + 0.3 * 0.5),
+    }
+
+    # the per-candidate surface scores every candidate with the same score
+    from collections import Counter
+
+    cands = linking.scored_candidates(mentions, alias, embs).collect()
+    assert Counter(
+        (r["word"].lower(), r["entity_id"], r["link_kind"], r["canonical_name"],
+         r["link_score"]) for r in cands
+    ) == Counter(
+        (a.lower(), e, k, n, None if p is None else 0.7 * 0.0 + 0.3 * p)
+        for a, e, k, n, p in _HAND_ALIASES
+    )
+
+
+def test_fuzzy_candidates_pick_is_order_independent(spark):
+    """One entity with two aliases within edit distance 1 of an OOV
+    surface gives one fuzzy row, the one with the smallest (alias, kind,
+    canonical_name, prior), at 1 and at 5 partitions with the inputs in
+    reverse order."""
+    aliases = [
+        ("Acme", "E:x", "ORG", "Acme Corp", 0.9),
+        ("Acmi", "E:x", "ORG", "Acmi Ltd", 0.4),
+        ("Globex", "E:g", "ORG", "Globex", 0.8),
+    ]
+    words = [(f"m{i}", w, f"ctx {i}")
+             for i, w in enumerate(["Acm", "Acme", "Globe", "Acmi", "Acm"] * 4)]
+    cols = ["alias", "entity_id", "kind", "canonical_name", "prior"]
+
+    def run(alias_rows, word_rows, n):
+        m = spark.createDataFrame(
+            word_rows, "mention_id string, word string, ctx string"
+        ).repartition(n)
+        out = linking.fuzzy_candidates(m, synth.local_dim_df(spark, alias_rows, cols))
+        return sorted(out.where(F.col("match_dist") == 1).collect())
+
+    one = run(aliases, words, 1)
+    assert one == run(aliases[::-1], words[::-1], 5)
+    acm = [r for r in one if r["word"] == "Acm"]
+    assert len(acm) == 8
+    assert {(r["alias"], r["entity_id"], r["canonical_name"], r["prior"])
+            for r in acm} == {("Acme", "E:x", "Acme Corp", 0.45)}
+
+
+def test_gather_path_links_like_builtin_dims(spark, tmp_path):
+    """An entity dimension padded past ``MATMUL_MAX_ENTITIES`` (so
+    ``_cosine_rows`` gathers pairs instead of one matmul) links exactly
+    like the built-in one. The padding is low-prior distractor holders
+    of every real surface plus unmatched fillers, all with embeddings
+    only in the padding dimensions ``[len(VOCAB), EMB_DIM)``, where every
+    context vector is zero: a distractor scores at most 0.3 * 0.3, below
+    every real holder."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(5)
+    lo = len(synth.VOCAB)
+
+    def pad_vector():
+        v = np.zeros(synth.EMB_DIM, np.float32)
+        v[lo:] = rng.random(synth.EMB_DIM - lo) + 0.05
+        return (v / np.linalg.norm(v)).tolist()
+
+    aliases = [tuple(r) for r in synth.alias_table()]
+    embs = list(synth.entity_embeddings())
+    for s in sorted({a for a, *_ in aliases}):
+        for j in range(4):
+            eid = f"DST:{s.lower()}:{j}"
+            aliases.append((s, eid, "MISC", f"{s} ({j})", 0.01 + 0.07 * j))
+            embs.append((eid, pad_vector()))
+    for i in range(linking.MATMUL_MAX_ENTITIES + 100 - len(embs)):
+        aliases.append((f"filler entity {i}", f"FILL:{i}", "ORG", f"Filler {i}", 0.5))
+        embs.append((f"FILL:{i}", pad_vector()))
+    assert len(embs) > linking.MATMUL_MAX_ENTITIES
+    cols = ["alias", "entity_id", "kind", "canonical_name", "prior"]
+    pq.write_table(pa.table(dict(zip(cols, zip(*aliases)))), str(tmp_path / "a.parquet"))
+    pq.write_table(
+        pa.table({"entity_id": [e for e, _ in embs],
+                  "emb": pa.array([v for _, v in embs], pa.list_(pa.float32()))}),
+        str(tmp_path / "e.parquet"),
+    )
+
+    docs = synth.synth_documents(spark, 120, partitions=2)
+    m = ner.mentions_of(ner.extract(docs)).cache()
+
+    def linked(alias, embs_df):
+        rows = linking.link_mentions(m, alias, embs_df).collect()
+        return {r["mention_id"]: r for r in rows}
+
+    want = linked(synth.alias_df(spark), synth.entity_emb_df(spark))
+    got = linked(spark.read.parquet(str(tmp_path / "a.parquet")),
+                 spark.read.parquet(str(tmp_path / "e.parquet")))
+    m.unpersist()
+    assert want and got.keys() == want.keys()
+    for k, w in want.items():
+        g = got[k]
+        assert g[:-1] == w[:-1]
+        assert abs(g["link_score"] - w["link_score"]) <= 1e-12

@@ -50,13 +50,16 @@ def test_parquet_filter_pushdown(spark, tmp_path):
     assert "PushedFilters: [IsNotNull(o_orderkey), EqualTo(o_orderkey,42)]" in plan
 
 
-def test_candidate_join_is_broadcast(spark, corpus_path):
+def test_link_mentions_plan_has_no_exchange(spark, corpus_path):
     docs = spark.read.parquet(corpus_path)
     mentions = N.mentions_of(N.extract(docs))
     linked = L.link_mentions(mentions, synth.alias_df(spark), synth.entity_emb_df(spark))
     plan = _plan(linked)
-    assert "BroadcastHashJoin" in plan
-    # dims are VALUES LocalRelations — no Python RDD scans anywhere
+    # the dimensions arrive prepared in one broadcast variable: no join,
+    # so no exchange of any kind (broadcast or shuffle) in the plan
+    assert "Exchange" not in plan, plan
+    assert "Join" not in plan, plan
+    # no Python RDD scans anywhere
     assert "applySchemaToPythonRDD" not in plan
 
 
@@ -552,7 +555,8 @@ def test_kg_pipeline_job_count(spark, monkeypatch):
     driver: one inline run + sink runs at most half the jobs of the
     distributed path, and the ``components`` and ``nodes`` stages
     together run only the statistics collect (its aggregation's map
-    stage and its result)."""
+    stage and its result). ``linked_mentions`` runs 5 jobs, two of them
+    the Arrow collects of its prepared dimension."""
     import uuid
 
     from pg_iui_ner_api_spark.plans import lineage
@@ -595,5 +599,6 @@ def test_kg_pipeline_job_count(spark, monkeypatch):
     sink(res)
     res["_runner"].unpersist()
     docs.unpersist()
+    assert _jobs_in_group(spark, f"linked_mentions-{tag}") == 5
     assert _jobs_in_group(spark, f"components-{tag}") == 2
     assert _jobs_in_group(spark, f"nodes-{tag}") == 0
