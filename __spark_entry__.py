@@ -1041,7 +1041,7 @@ def _q_kg_edges_canonical(spark, sf):
 
     docs = synth.synth_documents(spark, _KG_DOCS, partitions=8)
     res = run_kg_pipeline(spark, docs)
-    ce = canonical_edges(res["edges"], res["linked_mentions"], res["components"])
+    ce = canonical_edges(res["edges"], res["components"], res["nodes"])
     return ce.select("subj", "pred", "obj", "doc_id")
 
 

@@ -79,9 +79,7 @@ def _kg_audit(res: dict) -> dict:
     from .operators.components import canonical_edges
     from .operators.rules import schema_induction
 
-    ce = canonical_edges(
-        res["edges"], res["linked_mentions"], res["components"]
-    )
+    ce = canonical_edges(res["edges"], res["components"], res["nodes"])
     dq = check_constraints(
         ce,
         [

@@ -2,18 +2,18 @@
 
 Every solver here has two physical paths, chosen by one limited collect
 against the one shared bound ``SMALL_GRAPH_EDGES``: at or below it the
-rows are solved on the driver and the result is a LocalRelation; above
-it the work stays in Spark.
+rows are solved on the driver and the result is a LocalRelation built
+from one Arrow table; above it the work stays in Spark.
 
 * :func:`connected_components`: a driver union-find, or the
   distributed alternating-star loop below.
-* Batch canonicalization: :func:`driver_canonicalize` collects the
-  :func:`link_stats` table once and runs the same union-find and the
-  three votes of :func:`canonical_nodes` in Python, returning both the
-  ``components`` and the ``nodes`` table; above the bound the pipeline
-  runs :func:`canonical_components` + :func:`canonical_nodes`. The
-  streaming compactor always folds with :func:`fold_components`, whose
-  ``(node, component)`` state needs the surface nodes too.
+* :func:`canonicalize`: the one canonicalization of a :func:`link_stats`
+  table, for the batch pipeline (the whole corpus is one delta) and the
+  streaming compactor (each delta folded into the previous state). It
+  collects the summed statistics once; at or below the bound the same
+  union-find and the votes of :func:`canonical_nodes` run in Python,
+  above it :func:`entity_components` + :func:`canonical_nodes` run over
+  the star loop or :func:`incremental_components`.
 
 The distributed loop implements the MapReduce CC algorithm of Kiveris
 et al., "Connected Components in MapReduce and Beyond" (SOCC'14), on
@@ -31,7 +31,7 @@ algorithm OOM on big graphs), and convergence is detected by an edge-set
 checksum (count + sum of xxhash64), not a collect of the edges.
 
 Skew: hub components (a celebrity entity with 10^9 mentions) concentrate
-on the hub's min node. The block graph of ``canonical_components``
+on the hub's min node. The block graph of :func:`canonicalize`
 already avoids quadratic blowup (a hub entity is one node, its mentions
 collapse into distinct entity↔surface edges, never pairwise), and AQE
 skew-join splitting handles the remaining reduce-side skew.
@@ -41,7 +41,10 @@ from __future__ import annotations
 
 from typing import Iterable
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 
 def _edge_checksum(e: DataFrame) -> tuple[int, int]:
@@ -80,10 +83,11 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 
 # Driver path at or below this many rows. Measured on a 4-core host
-# with the default driver heap, on synthetic link statistics: the driver
-# path was no slower than the distributed one for both solvers up to
-# 3*10^4 rows; at 10^5 the driver union-find lost to the star loop.
-SMALL_GRAPH_EDGES = 30_000
+# with the default driver heap, on synthetic link statistics chained into
+# components of 10 entities: with Arrow-built results the driver path
+# beat the distributed one for both solvers at every size from 10^3 to
+# 10^5 rows (at 10^5: 2.6-4.4 s against 12-41 s); larger was not measured.
+SMALL_GRAPH_EDGES = 100_000
 
 
 def _union_find(edges: Iterable[tuple[int, int]]) -> dict[int, int]:
@@ -110,28 +114,18 @@ def _union_find(edges: Iterable[tuple[int, int]]) -> dict[int, int]:
 
 
 def _local_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
-    """``rows`` as a LocalRelation with the column types of ``schema``
-    (``"name type, ..."``) — also when there are no rows, which a
-    ``VALUES`` literal cannot express."""
-    fields = [f.split() for f in schema.split(",")]
-    if not rows:
-        cols = ", ".join(f"CAST(NULL AS {t}) {n}" for n, t in fields)
-        return spark.sql(f"SELECT {cols} WHERE FALSE")
-    from ..synth import local_dim_df
-
-    return local_dim_df(spark, rows, [n for n, _ in fields]).select(
-        *(F.col(n).cast(t).alias(n) for n, t in fields))
+    """``rows`` as a LocalRelation of ``schema`` (``"name type, ..."``),
+    built from one Arrow table: no SQL text to parse and analyse, and no
+    Spark job when it is read, also when there are no rows."""
+    arrow = to_arrow_schema(DataType.fromDDL(schema))
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(
+        pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(cols, arrow)],
+                             schema=arrow),
+        schema)
 
 
-def _driver_cc(spark, rows) -> DataFrame:
-    """Union-find on the driver for small graphs — one pass, zero jobs.
-
-    The distributed loop costs ~10 Spark jobs per iteration (stars +
-    checksum); at or below SMALL_GRAPH_EDGES the graph fits in driver
-    memory and the answer is a LocalRelation.
-    """
-    comp = _union_find((r["u"], r["v"]) for r in rows)
-    return _local_frame(spark, sorted(comp.items()), "node bigint, component bigint")
+_ASSIGN = "node bigint, component bigint"
 
 
 def connected_components(edges: DataFrame, max_iter: int = 25,
@@ -151,8 +145,15 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     e = edges.select("u", "v").where(F.col("u") != F.col("v")).distinct()
     head = e.limit(small_graph_edges + 1).collect()
     if len(head) <= small_graph_edges:
-        return _driver_cc(e.sparkSession, head)
-    e = e.localCheckpoint()
+        comp = _union_find((r["u"], r["v"]) for r in head)
+        return _local_frame(e.sparkSession, sorted(comp.items()), _ASSIGN)
+    return _star_loop(e.localCheckpoint(), max_iter)
+
+
+def _star_loop(e: DataFrame, max_iter: int = 25) -> DataFrame:
+    """The distributed path of :func:`connected_components` over deduped
+    edges ``e``: alternate the two stars until the edge-set checksum
+    stops changing (~10 Spark jobs per round)."""
     prev = _edge_checksum(e)
     for _ in range(max_iter):
         e = _small_star(_large_star(e)).localCheckpoint()
@@ -214,7 +215,7 @@ def incremental_components(assign: DataFrame, new_edges: DataFrame,
     ).unionByName(delta)
     sub = connected_components(sub_edges, max_iter, small_graph_edges)
     untouched = assign.join(touched_comps, "component", "left_anti")
-    return untouched.unionByName(sub.select("node", "component"))
+    return untouched.select("node", "component").union(sub)
 
 
 def link_stats(linked_mentions: DataFrame) -> DataFrame:
@@ -257,46 +258,6 @@ def entity_components(stats: DataFrame, assign: DataFrame) -> DataFrame:
     )
 
 
-def fold_components(
-    delta: DataFrame, prev: tuple[DataFrame, DataFrame] | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """Fold a :func:`link_stats` DELTA into ``prev = (stats, assign)``
-    (``assign``: the block graph's ``(node, component)`` assignment) and
-    return the new pair. With ``prev`` the stats union-sum and only the
-    delta's NEW ``(entity_id, surface)`` pairs reach
-    :func:`incremental_components`; without, the delta is the state."""
-    if prev is None:
-        return delta, connected_components(block_edges(delta))
-    stats, assign = prev
-    pair = ["entity_id", "surface"]
-    new_pairs = delta.join(stats.select(*pair), pair, "left_anti")
-    folded = (
-        stats.unionByName(delta)
-        .groupBy(*pair, "canonical_name", "link_kind")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-    return folded, incremental_components(assign, block_edges(new_pairs))
-
-
-def canonical_components(stats: DataFrame) -> DataFrame:
-    """Entity-level canonicalization -> component per linked entity.
-
-    Two mentions co-refer iff they are connected through shared linked
-    entity_ids and/or shared normalized surfaces. That relation factors
-    through the **bipartite entity↔surface block graph**: mention m
-    (entity e, surface s) connects e—s; components of mentions =
-    components of their entity nodes in that graph, so the component is
-    a function of the entity. At 10^12 documents the graph is still
-    dimension-sized (``stats`` is :func:`link_stats`), and a hub entity
-    with 10^9 mentions is exactly one node here; skew never reaches the
-    loop.
-
-    Returns ``(entity_id, node, component)``, one row per linked entity,
-    with node/component being stable 64-bit hashes of block-graph ids.
-    """
-    return entity_components(stats, fold_components(stats)[1])
-
-
 def _vote(stats: DataFrame, ent_comp: DataFrame, col: str) -> DataFrame:
     """``(component, <col>, n_mentions)``: the per-component modal value
     of ``col`` over the additive counts of :func:`link_stats` (summed
@@ -319,7 +280,8 @@ def _vote(stats: DataFrame, ent_comp: DataFrame, col: str) -> DataFrame:
 def canonical_nodes(stats: DataFrame, ent_comp: DataFrame) -> DataFrame:
     """KG node table: one row per canonical entity cluster, built from
     the counts of :func:`link_stats` and the
-    ``(entity_id, component)`` map of :func:`canonical_components`.
+    ``(entity_id, component)`` map of :func:`entity_components` — the
+    distributed path of :func:`canonicalize`.
 
     Representative entity = modal linked entity of the component;
     canonical_name = modal canonical_name (A5 'canonical name vote');
@@ -349,27 +311,66 @@ def _vote_key(item: tuple) -> tuple:
     return -count, value is not None, value or ""
 
 
-def driver_canonicalize(stats: DataFrame) -> tuple[DataFrame, DataFrame] | None:
-    """Batch canonicalization of a :func:`link_stats` table on the
-    driver: ``(components, nodes)`` with the rows and column types of
-    :func:`canonical_components` and :func:`canonical_nodes`, built
-    from ONE collect, or ``None`` when ``stats`` has more than
-    ``SMALL_GRAPH_EDGES`` rows (the caller then runs the distributed
-    path).
+_STATS = ("entity_id string, surface string, canonical_name string, "
+          "link_kind string, cnt bigint")
 
-    Spark computes the block-graph ids ``u``/``v`` of each row, so the
-    hash is never re-implemented here; Python runs the same union-find
-    as :func:`connected_components`'s driver path and the three votes of
-    :func:`canonical_nodes` with :func:`_vote`'s tie rule. Both results
-    are LocalRelations, so neither stage runs a further job.
+
+def canonicalize(
+    delta: DataFrame, prev: tuple[DataFrame, DataFrame] | None = None
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """Entity canonicalization of a :func:`link_stats` DELTA folded into
+    ``prev = (stats, assign)``: returns ``(stats, assign, components,
+    nodes)`` — the summed statistics, the block graph's ``(node,
+    component)`` assignment, one ``(entity_id, node, component)`` row
+    per linked entity and the :func:`canonical_nodes` table. The batch
+    pipeline passes the whole corpus as one delta; the streaming
+    compactor passes the state it read and writes the first two back.
+
+    Two mentions co-refer iff they are connected through shared linked
+    entity_ids and/or shared normalized surfaces. That relation factors
+    through the **bipartite entity↔surface block graph**: mention m
+    (entity e, surface s) connects e—s; components of mentions =
+    components of their entity nodes in that graph, so the component is
+    a function of the entity. At 10^12 documents the graph is still
+    dimension-sized (``stats`` is bounded by vocabulary × entities),
+    and a hub entity with 10^9 mentions is exactly one node here; skew
+    never reaches the loop. ``node``/``component`` are stable 64-bit
+    hashes of block-graph ids.
+
+    The path is chosen by ONE limited collect of the summed statistics,
+    with the block-graph ids ``u``/``v`` computed by Spark (the hash is
+    never re-implemented here). At or below ``SMALL_GRAPH_EDGES`` rows
+    Python runs :func:`_union_find` and the three votes with
+    :func:`_vote`'s tie rule, and all four tables are LocalRelations;
+    ``assign`` is recomputed from the summed statistics, which is exact
+    because they hold every (entity, surface) pair ever seen. Above the
+    bound the statistics are checkpointed once and Spark runs the star
+    loop (no ``prev``) or :func:`incremental_components` from
+    ``prev``'s assignment over the delta's new pairs, then
+    :func:`entity_components` and :func:`canonical_nodes`.
     """
+    pair = ["entity_id", "surface"]
+    stats = delta if prev is None else (
+        prev[0].unionByName(delta)
+        .groupBy(*pair, "canonical_name", "link_kind")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
     rows = (
-        stats.select("entity_id", "canonical_name", "link_kind", "cnt",
+        stats.select(*pair, "canonical_name", "link_kind", "cnt",
                      _entity_node().alias("u"), _surface_node().alias("v"))
         .limit(SMALL_GRAPH_EDGES + 1).collect()
     )
     if len(rows) > SMALL_GRAPH_EDGES:
-        return None
+        stats = stats.localCheckpoint()
+        if prev is None:
+            assign = _star_loop(block_edges(stats).distinct())
+        else:
+            new_pairs = delta.join(prev[0].select(*pair), pair, "left_anti")
+            assign = incremental_components(
+                prev[1], block_edges(new_pairs),
+                small_graph_edges=SMALL_GRAPH_EDGES)
+        components = entity_components(stats, assign)
+        return stats, assign, components, canonical_nodes(stats, components)
     comp = _union_find((r["u"], r["v"]) for r in rows)
     node_of = {r["entity_id"]: r["u"] for r in rows}
     votes: dict[int, tuple[dict, dict, dict]] = {}
@@ -379,39 +380,38 @@ def driver_canonicalize(stats: DataFrame) -> tuple[DataFrame, DataFrame] | None:
                                          r["link_kind"])):
             vote[value] = vote.get(value, 0) + r["cnt"]
     spark = stats.sparkSession
-    components = _local_frame(
-        spark,
-        [(e, n, comp[n]) for e, n in node_of.items()],
-        "entity_id string, node bigint, component bigint")
-    nodes = _local_frame(
-        spark,
-        [tuple(min(vote.items(), key=_vote_key)[0] for vote in ballots)
-         + (sum(ballots[0].values()),) for ballots in votes.values()],
-        "entity_id string, canonical_name string, kind string, n_mentions bigint")
-    return components, nodes
+    return (
+        _local_frame(spark, [r[:5] for r in rows], _STATS),
+        _local_frame(spark, sorted(comp.items()), _ASSIGN),
+        _local_frame(spark, [(e, n, comp[n]) for e, n in node_of.items()],
+                     "entity_id string, node bigint, component bigint"),
+        _local_frame(
+            spark,
+            [tuple(min(vote.items(), key=_vote_key)[0] for vote in ballots)
+             + (sum(ballots[0].values()),) for ballots in votes.values()],
+            "entity_id string, canonical_name string, kind string, n_mentions bigint"),
+    )
 
 
-def entity_canonical_map(
-    linked_mentions: DataFrame, components: DataFrame
-) -> DataFrame:
-    """(entity_id, canonical_id): every linked entity mapped to its
-    component's representative — the SAME vote :func:`canonical_nodes`
-    takes, so the map and the node table agree by construction.
-    Representatives map to themselves. Dimension-sized output: bounded
-    by the entity vocabulary, never the corpus."""
-    rep = _vote(link_stats(linked_mentions), components, "entity_id")
-    return components.join(
-        rep.select("component", F.col("entity_id").alias("canonical_id")),
-        "component",
-    ).select("entity_id", "canonical_id")
+def entity_canonical_map(components: DataFrame, nodes: DataFrame) -> DataFrame:
+    """(entity_id, canonical_id): every entity of ``components`` mapped
+    to its component's representative, the one member entity that owns
+    a row of the ``nodes`` table (each entity lies in exactly one
+    component, so representatives are distinct across components), so
+    the map and the node table agree by construction. Representatives
+    map to themselves. Dimension-sized output: bounded by the entity
+    vocabulary, never the corpus."""
+    rep = components.join(nodes.select("entity_id"), "entity_id").select(
+        "component", F.col("entity_id").alias("canonical_id"))
+    return components.join(rep, "component").select("entity_id", "canonical_id")
 
 
 def canonical_edges(
-    edges: DataFrame, linked_mentions: DataFrame, components: DataFrame
+    edges: DataFrame, components: DataFrame, nodes: DataFrame
 ) -> DataFrame:
     """Edge table with subj/obj rewritten to canonical (component-
     representative) entity ids — the referentially-closed view whose
-    every endpoint exists in :func:`canonical_nodes`.
+    every endpoint exists in ``nodes``.
 
     The raw ``edges`` output keeps per-mention LINKED entity ids
     because that is the reference-parity surface (span/triple equality
@@ -426,7 +426,7 @@ def canonical_edges(
     entity map — broadcast, map-only, zero shuffles of the edge table;
     row count and evidence provenance are preserved exactly.
     """
-    m = entity_canonical_map(linked_mentions, components)
+    m = entity_canonical_map(components, nodes)
     subj_map = F.broadcast(
         m.select(F.col("entity_id").alias("subj"), F.col("canonical_id").alias("_cs"))
     )

@@ -137,9 +137,9 @@ class StageRunner:
         ``build`` is a thunk returning the stage DataFrame. With no
         workdir the stage runs unmaterialized (pure lazy pipeline);
         ``persist`` marks stages with MULTIPLE downstream consumers
-        (extraction feeds mentions+predicates, linked feeds
-        components+nodes+edges) — single-consumer stages skip the cache
-        write entirely.
+        (extraction feeds mentions+predicates, linked feeds the one
+        canonicalization collect and edges) — single-consumer stages
+        skip the cache write entirely.
 
         ``bucket_by`` materializes the stage as a BUCKETED external
         catalog table at the same workdir path: ``bucketBy(n, key)``

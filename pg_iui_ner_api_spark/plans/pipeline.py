@@ -3,18 +3,18 @@
     documents ──extract──> mentions + predicates      (1 corpus scan)
        mentions ──link──> linked_mentions             (one Arrow UDF over
                                                        a prepared dimension)
-       linked ──link_stats──> components, nodes       (one collect: CC +
-                                                       votes on the driver)
+       linked ──canonicalize──> components, nodes     (one collect of the
+                                                       link statistics: CC
+                                                       + votes on the driver)
        linked + predicates ──assemble──> edges        (co-keyed joins)
 
 The per-document steps live in :func:`graph_increment` and
 :func:`stage_edges`, which the streaming ingest also runs per
-micro-batch. Canonicalization reads only ``components.link_stats``: a
-table of at most ``components.SMALL_GRAPH_EDGES`` rows is collected
-once and both the ``components`` and the ``nodes`` stage are built from
-it on the driver; a larger one runs the distributed path. The
-streaming compactor folds the same table batch by batch into its
-``stats`` + ``assign`` state.
+micro-batch. Canonicalization is one ``components.canonicalize`` call
+over ``components.link_stats``, the call the streaming compactor makes
+per delta: a table of at most ``components.SMALL_GRAPH_EDGES`` rows is
+collected once and both the ``components`` and the ``nodes`` stage are
+built from it on the driver; a larger one runs the distributed path.
 
 Partitioning contract: one explicit doc_id hash partitioning
 (north_rule), placed AFTER the map-only linking stage — extraction and
@@ -123,34 +123,21 @@ def run_kg_pipeline(
     (inline when ``workdir`` is None): extraction, linked mentions,
     ``components``, ``nodes``, ``edges`` and, with a workdir,
     ``edges_by_subj``. The two canonicalization stages share one cached
-    build (see the module docstring), so a small corpus collects its
-    link statistics once and neither stage runs a further job."""
+    :func:`components.canonicalize` call (see the module docstring), so
+    a small corpus collects its link statistics once and neither stage
+    runs a further job."""
     runner = StageRunner(spark, workdir, run_id=run_id, input_fingerprint=input_fingerprint)
     n_part = doc_partitions or spark.sparkContext.defaultParallelism
     out = graph_increment(runner, documents, alias_df, entity_emb_df, n_part)
 
-    @functools.cache
-    def canon() -> tuple[DataFrame, tuple[DataFrame, DataFrame] | None]:
-        # the whole corpus is one delta of the streaming compactor's
-        # fold. One collect of the link statistics builds both
-        # canonicalization stages on the driver when the table is small;
-        # above the bound one checkpoint of it feeds the distributed
-        # path. Nothing runs when both stages resume.
-        stats = C.link_stats(out["linked_mentions"])
-        small = C.driver_canonicalize(stats)
-        return (stats if small else stats.localCheckpoint()), small
-
-    def _components() -> DataFrame:
-        stats, small = canon()
-        return small[0] if small else C.canonical_components(stats)
-
-    def _nodes() -> DataFrame:
-        stats, small = canon()
-        return small[1] if small else C.canonical_nodes(stats, comps)
-
-    comps = out["components"] = runner.stage("components", _components, persist=False)
+    # the whole corpus is one delta of the compactor's canonicalization;
+    # one cached call feeds both stages, and nothing runs when both resume
+    canon = functools.cache(
+        lambda: C.canonicalize(C.link_stats(out["linked_mentions"])))
+    out["components"] = runner.stage("components", lambda: canon()[2], persist=False)
     out["nodes"] = runner.stage(
-        "nodes", _nodes, persist=False, bucket_by="entity_id", n_buckets=n_part)
+        "nodes", lambda: canon()[3], persist=False, bucket_by="entity_id",
+        n_buckets=n_part)
     out["edges"] = stage_edges(runner, out, n_part)
     if runner.workdir is not None:
         # entity-keyed twin of the edge table: re-bucket (one shuffle at

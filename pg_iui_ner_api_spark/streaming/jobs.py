@@ -17,7 +17,10 @@ count-based batch flushing (W2, lines 47-50), plus a polling scheduler
     a watermark for late data (W2's time-based twin; the driver
     testdata ``events`` table has real timestamps).
   * ``stream_kg_increment`` + ``compact_kg_nodes`` — the KG pipeline's
-    continuous twin, built from the batch pipeline's own parts.
+    continuous twin, built from the batch pipeline's own parts: the
+    per-batch builder of ``plans/pipeline.py`` and the one
+    ``components.canonicalize``, which the compactor calls with the
+    state it keeps.
 
 Checkpointing: Spark's own streaming checkpoint (offset log + state
 store) supplies exactly-once per sink; the batch pipeline's lineage
@@ -346,13 +349,16 @@ def compact_kg_nodes(
     the full reread is the scale-killer in an otherwise incremental
     path). The compactor keeps two DIMENSION-sized state tables under
     ``workdir/compact_state`` and folds only the batches newer than its
-    high-water mark with :func:`operators.components.fold_components`:
+    high-water mark with :func:`operators.components.canonicalize`, the
+    batch pipeline's own canonicalization:
 
       * ``stats``  — the additive link statistics
         (:func:`operators.components.link_stats`); the node table is
         rebuilt from them without touching any corpus-sized table;
-      * ``assign`` — the block graph's (node, component) assignment
-        (cost of a fold ∝ delta + touched components, never history).
+      * ``assign`` — the block graph's (node, component) assignment.
+        Summed statistics of at most ``SMALL_GRAPH_EDGES`` rows are
+        solved on the driver in one collect; above that a fold costs
+        ∝ delta + touched components, never history.
 
     State versions are written to ``v=<high-water batch>`` dirs and the
     meta file is updated LAST, so a crash mid-compaction resumes from
@@ -403,8 +409,7 @@ def compact_kg_nodes(
         spark.read.parquet(f"{state_dir}/{name}/v={meta['version']}")
         for name in state
     )
-    stats, assign = C.fold_components(delta, prev)
-    nodes = C.canonical_nodes(stats, C.entity_components(stats, assign))
+    stats, assign, _, nodes = C.canonicalize(delta, prev)
 
     hwm = max(new_ids)
     for name, df in zip(state, (stats, assign)):

@@ -4,7 +4,10 @@ large-star/small-star loop (forced via small_graph_edges=0)."""
 
 import pytest
 
-from pg_iui_ner_api_spark.operators.components import connected_components
+from pg_iui_ner_api_spark.operators.components import (
+    SMALL_GRAPH_EDGES,
+    connected_components,
+)
 
 STRATS = [pytest.param(2_000_000, id="driver"), pytest.param(0, id="distributed")]
 
@@ -174,34 +177,29 @@ def test_component_stats_star_vs_sparse(spark):
     assert r["max_degree"] == 4 and r["density"] == 0.4
 
 
-def _driver_canon(stats):
-    from pg_iui_ner_api_spark.operators.components import driver_canonicalize
-
-    return driver_canonicalize(stats)
-
-
-def _distributed_canon(stats):
-    from pg_iui_ner_api_spark.operators.components import (
-        canonical_components,
-        canonical_nodes,
-    )
-
-    comps = canonical_components(stats)
-    return comps, canonical_nodes(stats, comps)
+# ---------------------------------------------------------------------------
+# canonicalize: one entry point, two physical paths chosen by the bound
+# ---------------------------------------------------------------------------
+LM_COLS = ("mention_id long, entity_id string, word string, "
+           "canonical_name string, link_kind string")
+# the shared bound picks the driver path, 0 the distributed one
+BOUNDS = (SMALL_GRAPH_EDGES, 0)
 
 
-def test_canonical_nodes_hand_built_votes(spark):
+def _is_local(df):
+    return df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() \
+        == "LocalRelation"
+
+
+def test_canonical_nodes_hand_built_votes(spark, monkeypatch):
     """Node table and entity map over a hand-built linked-mentions frame
     with hand-written expected rows, on the driver and the distributed
-    canonicalization path alike: a tied entity vote (smaller entity_id
-    wins), a tied name vote (smaller name wins, in UTF-8 byte order), a
-    null name that ties and wins (a null sorts first), a name with a
-    backslash and a quote, a component joined only through a shared
-    surface, and n_mentions summed over the component."""
-    from pg_iui_ner_api_spark.operators.components import (
-        entity_canonical_map,
-        link_stats,
-    )
+    path of ``canonicalize`` alike: a tied entity vote (smaller
+    entity_id wins), a tied name vote (smaller name wins, in UTF-8 byte
+    order), a null name that ties and wins (a null sorts first), a name
+    with a backslash and a quote, a component joined only through a
+    shared surface, and n_mentions summed over the component."""
+    from pg_iui_ner_api_spark.operators import components as C
 
     lm = spark.createDataFrame(
         [
@@ -223,15 +221,16 @@ def test_canonical_nodes_hand_built_votes(spark):
             (12, "Q8", "Krakow", None, "LOC"),
             (13, "Q8", "Cracow", "Kraków", "LOC"),
         ],
-        "mention_id long, entity_id string, word string, "
-        "canonical_name string, link_kind string",
+        LM_COLS,
     ).repartition(3)
-    stats = link_stats(lm)
-    for canon in (_driver_canon, _distributed_canon):
-        comps, nodes = canon(stats)
+    stats = C.link_stats(lm)
+    for bound in BOUNDS:
+        monkeypatch.setattr(C, "SMALL_GRAPH_EDGES", bound)
+        _, _, comps, nodes = C.canonicalize(stats)
+        assert _is_local(nodes) == (bound > 0), bound
         assert comps.dtypes == [
             ("entity_id", "string"), ("node", "bigint"), ("component", "bigint")]
-        assert comps.count() == 8, canon
+        assert comps.count() == 8, bound
         assert nodes.dtypes == [("entity_id", "string"), ("canonical_name", "string"),
                                 ("kind", "string"), ("n_mentions", "bigint")]
         assert sorted(tuple(r) for r in nodes.collect()) == [
@@ -241,42 +240,40 @@ def test_canonical_nodes_hand_built_votes(spark):
             ("Q7", "Lodz", "LOC", 2),
             ("Q8", None, "LOC", 2),
             ("Q9", "Bob", "PER", 1),
-        ], canon
+        ], bound
         got = {r.entity_id: r.canonical_id
-               for r in entity_canonical_map(lm, comps).collect()}
+               for r in C.entity_canonical_map(comps, nodes).collect()}
         assert got == {"Q1": "Q1", "Q2": "Q1", "Q3": "Q3", "Q4": "Q5", "Q5": "Q5",
-                       "Q7": "Q7", "Q8": "Q8", "Q9": "Q9"}, canon
+                       "Q7": "Q7", "Q8": "Q8", "Q9": "Q9"}, bound
 
 
-def test_driver_canonicalization_above_bound_returns_none(spark, monkeypatch):
-    """The driver path declines a statistics table of more than
-    ``SMALL_GRAPH_EDGES`` rows and takes one of exactly that many."""
+def test_canonicalize_bound_picks_the_path(spark, monkeypatch):
+    """A statistics table of more than ``SMALL_GRAPH_EDGES`` rows takes
+    the distributed path, one of exactly that many the driver path; both
+    return the same rows in all four tables."""
     from pg_iui_ner_api_spark.operators import components as C
 
     stats = C.link_stats(spark.createDataFrame(
-        [(1, "Q1", "a", "A", "ORG"), (2, "Q2", "b", "B", "ORG")],
-        "mention_id long, entity_id string, word string, "
-        "canonical_name string, link_kind string"))
-    monkeypatch.setattr(C, "SMALL_GRAPH_EDGES", 1)
-    assert C.driver_canonicalize(stats) is None
-    monkeypatch.setattr(C, "SMALL_GRAPH_EDGES", 2)
-    assert C.driver_canonicalize(stats)[1].count() == 2
+        [(1, "Q1", "a", "A", "ORG"), (2, "Q2", "b", "B", "ORG")], LM_COLS))
+    got = {}
+    for bound in (1, 2):
+        monkeypatch.setattr(C, "SMALL_GRAPH_EDGES", bound)
+        tables = C.canonicalize(stats)
+        assert [_is_local(t) for t in tables] == [bound == 2] * 4, bound
+        got[bound] = [sorted(tuple(r) for r in t.collect()) for t in tables]
+    assert got[1] == got[2]
+    assert got[2][3] == [("Q1", "A", "ORG", 1), ("Q2", "B", "ORG", 1)]
 
 
-def test_fold_components_two_deltas_equal_one(spark):
-    """Folding link statistics delta by delta gives the state a single
-    fold of the union gives: the same summed counts, and the same
-    component per entity — including a second delta that merges two
-    earlier components through a new surface (relabelling the larger
-    component id) and one that only adds counts to known pairs."""
-    from pg_iui_ner_api_spark.operators.components import (
-        entity_components,
-        fold_components,
-        link_stats,
-    )
+def test_canonicalize_two_deltas_equal_one(spark, monkeypatch):
+    """Folding link statistics delta by delta gives the tables one call
+    over the union gives, on both paths: the same summed counts, the
+    same component per entity and the same hand-written node rows —
+    including a second delta that merges two earlier components through
+    a new surface (relabelling the larger component id) and one that
+    only adds counts to known pairs."""
+    from pg_iui_ner_api_spark.operators import components as C
 
-    cols = ("mention_id long, entity_id string, word string, "
-            "canonical_name string, link_kind string")
     first = [
         (1, "Q1", "Acme", "Acme Corp", "ORG"),
         (2, "Q2", "Initech", "Initech", "ORG"),
@@ -287,18 +284,23 @@ def test_fold_components_two_deltas_equal_one(spark):
         (5, "Q3", "PARIS", "City of Paris", "LOC"),  # known pair, new name
         (6, "Q9", "Bob", "Bob", "PER"),           # new component
     ]
-    d1 = link_stats(spark.createDataFrame(first, cols))
-    d2 = link_stats(spark.createDataFrame(second, cols))
-    both = link_stats(spark.createDataFrame(first + second, cols))
+    d1, d2, both = (C.link_stats(spark.createDataFrame(rows, LM_COLS))
+                    for rows in (first, second, first + second))
 
-    def state(stats, assign):
-        comp = {r.entity_id: r.component
-                for r in entity_components(stats, assign).collect()}
-        return sorted(tuple(r) for r in stats.collect()), comp
+    def tables(stats, assign, comps, nodes):
+        comp = {r.entity_id: r.component for r in comps.collect()}
+        return (sorted(tuple(r) for r in stats.collect()),
+                sorted(tuple(r) for r in assign.collect()), comp,
+                sorted(tuple(r) for r in nodes.collect()))
 
-    folded = state(*fold_components(d2, fold_components(d1)))
-    whole = state(*fold_components(both))
-    assert folded == whole
-    comp = whole[1]
-    assert comp["Q1"] == comp["Q2"] != comp["Q3"] != comp["Q9"]
-    assert ("Q3", "paris", "City of Paris", "LOC", 1) in whole[0]
+    for bound in BOUNDS:
+        monkeypatch.setattr(C, "SMALL_GRAPH_EDGES", bound)
+        folded = tables(*C.canonicalize(d2, C.canonicalize(d1)[:2]))
+        whole = tables(*C.canonicalize(both))
+        assert folded == whole, bound
+        stats, _, comp, nodes = whole
+        assert comp["Q1"] == comp["Q2"] != comp["Q3"] != comp["Q9"]
+        assert ("Q3", "paris", "City of Paris", "LOC", 1) in stats
+        assert nodes == [("Q2", "Initech", "ORG", 3),
+                         ("Q3", "City of Paris", "LOC", 2),
+                         ("Q9", "Bob", "PER", 1)], bound

@@ -3,12 +3,14 @@ mode: inline, workdir, and two-batch streaming ingest + compaction.
 
 Compares order-independent checksums (row count + the sum of each row's
 ``xxhash64`` as ``decimal(20,0)``) of linked mentions, edges, components
-and nodes across ``doc_partitions`` ∈ {1, 3, 8} and
-``spark.sql.shuffle.partitions`` ∈ {1, 5, 32}, on both the driver and
-the distributed canonicalization path. A row that depends on
-partition order anywhere on the path changes a checksum; a tie broken
-by partition order shows only where the corpus has the tie, and this
-corpus has no tied canonical-node vote.
+and nodes across ``doc_partitions`` ∈ {1, 3, 8},
+``spark.sql.shuffle.partitions`` ∈ {1, 5, 32} and AQE on and off, on
+both the driver and the distributed canonicalization path, inline and
+in the compactor (whose folding compaction runs
+``incremental_components`` on the distributed path). A row that
+depends on partition order anywhere on the path changes a checksum; a
+tie broken by partition order shows only where the corpus has the tie,
+and this corpus has no tied canonical-node vote.
 """
 
 import glob
@@ -34,13 +36,17 @@ def _checksum(df):
     return int(row["n"]), int(row["h"] or 0)
 
 
-def _with_shuffle(spark, n, fn):
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+def _with_conf(spark, key, value, fn):
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(value))
     try:
         return fn()
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set(key, prev)
+
+
+def _with_shuffle(spark, n, fn):
+    return _with_conf(spark, "spark.sql.shuffle.partitions", n, fn)
 
 
 def _batch(spark, docs, doc_partitions, workdir=None):
@@ -81,11 +87,17 @@ def test_graph_checksums_invariant_to_partitioning_and_mode(spark, tmp_path,
                 spark, sp, lambda dp=dp: _batch(spark, docs.repartition(dp), dp))
             for dp, sp in ((1, 1), (3, 5), (8, 32))
         }
+        runs["inline AQE off shuffle=5"] = _with_conf(
+            spark, "spark.sql.adaptive.enabled", "false",
+            lambda: _with_shuffle(spark, 5, lambda: _batch(spark, docs, 3)))
         with monkeypatch.context() as m:
             # bound 0: the distributed canonicalization path
             m.setattr(C, "SMALL_GRAPH_EDGES", 0)
             runs["inline distributed canonicalization shuffle=5"] = _with_shuffle(
                 spark, 5, lambda: _batch(spark, docs, 3))
+            runs["stream+compaction distributed canonicalization shuffle=5"] = (
+                _with_shuffle(spark, 5, lambda: _stream(
+                    spark, docs, str(tmp_path / "stream-distributed"))))
         runs["workdir doc_partitions=3 shuffle=32"] = _with_shuffle(
             spark, 32, lambda: _batch(spark, docs, 3, str(tmp_path / "wd")))
         runs["stream+compaction shuffle=5"] = _with_shuffle(

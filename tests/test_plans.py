@@ -602,3 +602,40 @@ def test_kg_pipeline_job_count(spark, monkeypatch):
     assert _jobs_in_group(spark, f"linked_mentions-{tag}") == 5
     assert _jobs_in_group(spark, f"components-{tag}") == 2
     assert _jobs_in_group(spark, f"nodes-{tag}") == 0
+
+
+# A folding compact_kg_nodes (the second of two 150-doc batches, this
+# session) ran this many Spark jobs, the closing count of the read-back
+# nodes included, when the compactor folded its state with Spark jobs.
+FOLDING_COMPACTION_JOBS_DISTRIBUTED = 31
+
+
+def test_folding_compaction_job_count(spark, tmp_path):
+    """A compaction that folds a second batch into small state
+    canonicalizes on the driver: it runs at most half the jobs of the
+    distributed fold, and its nodes equal the batch pipeline's."""
+    import uuid
+
+    from pg_iui_ner_api_spark.plans.pipeline import run_kg_pipeline
+    from pg_iui_ner_api_spark.streaming import jobs as J
+
+    sc = spark.sparkContext
+    docs = synth.synth_documents(spark, 300, partitions=2).cache()
+    idx = F.regexp_extract("doc_id", r"doc(\d+)", 1).cast("long")
+    input_dir, wd, ckpt = (str(tmp_path / d) for d in ("in", "wd", "ckpt"))
+    for half in (idx < 150, idx >= 150):
+        docs.where(half).coalesce(1).write.mode("append").parquet(input_dir)
+        J.stream_kg_increment(spark, input_dir, wd, ckpt).awaitTermination()
+        group = f"compact-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            nodes = J.compact_kg_nodes(spark, wd)  # the second one folds
+            n = nodes.count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _jobs_in_group(spark, group) <= FOLDING_COMPACTION_JOBS_DISTRIBUTED // 2
+    res = run_kg_pipeline(spark, docs)
+    want = sorted(tuple(r) for r in res["nodes"].collect())
+    res["_runner"].unpersist()
+    docs.unpersist()
+    assert n == len(want) and sorted(tuple(r) for r in nodes.collect()) == want

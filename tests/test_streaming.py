@@ -260,9 +260,9 @@ def test_stream_kg_increment_matches_batch(spark, tmp_path):
     half1.coalesce(1).write.mode("append").parquet(input_dir)
     J.stream_kg_increment(spark, input_dir, wd, ckpt).awaitTermination()
     n_after_1 = spark.read.parquet(f"{wd}/edges_inc").count()
-    # compact mid-stream so the SECOND compaction exercises the
-    # incremental path (state fold + incremental_components), not the
-    # first-run full rebuild
+    # compact mid-stream so the SECOND compaction folds its delta into
+    # the kept state, not the first-run full rebuild (test_partition_
+    # invariance runs the same fold on the distributed path too)
     J.compact_kg_nodes(spark, wd)
 
     half2.coalesce(1).write.mode("append").parquet(input_dir)

@@ -65,9 +65,7 @@ def test_canonical_edges_referentially_closed(spark, result):
     from pg_iui_ner_api_spark.operators.components import canonical_edges
 
     res, _ = result
-    ce = canonical_edges(
-        res["edges"], res["linked_mentions"], res["components"]
-    )
+    ce = canonical_edges(res["edges"], res["components"], res["nodes"])
     rows = ce.collect()
     raw = res["edges"].collect()
     assert len(rows) == len(raw)  # row-preserving rewrite
