@@ -178,7 +178,7 @@ def ivf_topk(vectors: DataFrame, queries: DataFrame, dim: int, k: int = 10,
     from ..synth import local_dim_df
 
     cents = F.broadcast(
-        local_dim_df(spark, cent_rows, ["cell", "cent"]).select(
+        local_dim_df(spark, cent_rows, "cell int, cent array<float>").select(
             "cell", F.col("cent").cast("array<double>").alias("cent")
         )
     )

@@ -41,10 +41,9 @@ from __future__ import annotations
 
 from typing import Iterable
 
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import DataType
+
+from ..synth import local_dim_df
 
 
 def _edge_checksum(e: DataFrame) -> tuple[int, int]:
@@ -113,18 +112,6 @@ def _union_find(edges: Iterable[tuple[int, int]]) -> dict[int, int]:
     return {n: find(n) for n in parent}
 
 
-def _local_frame(spark, rows: list[tuple], schema: str) -> DataFrame:
-    """``rows`` as a LocalRelation of ``schema`` (``"name type, ..."``),
-    built from one Arrow table: no SQL text to parse and analyse, and no
-    Spark job when it is read, also when there are no rows."""
-    arrow = to_arrow_schema(DataType.fromDDL(schema))
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    return spark.createDataFrame(
-        pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(cols, arrow)],
-                             schema=arrow),
-        schema)
-
-
 _ASSIGN = "node bigint, component bigint"
 
 
@@ -146,7 +133,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     head = e.limit(small_graph_edges + 1).collect()
     if len(head) <= small_graph_edges:
         comp = _union_find((r["u"], r["v"]) for r in head)
-        return _local_frame(e.sparkSession, sorted(comp.items()), _ASSIGN)
+        return local_dim_df(e.sparkSession, sorted(comp.items()), _ASSIGN)
     return _star_loop(e.localCheckpoint(), max_iter)
 
 
@@ -313,6 +300,7 @@ def _vote_key(item: tuple) -> tuple:
 
 _STATS = ("entity_id string, surface string, canonical_name string, "
           "link_kind string, cnt bigint")
+_NODES = "entity_id string, canonical_name string, kind string, n_mentions bigint"
 
 
 def canonicalize(
@@ -381,15 +369,15 @@ def canonicalize(
             vote[value] = vote.get(value, 0) + r["cnt"]
     spark = stats.sparkSession
     return (
-        _local_frame(spark, [r[:5] for r in rows], _STATS),
-        _local_frame(spark, sorted(comp.items()), _ASSIGN),
-        _local_frame(spark, [(e, n, comp[n]) for e, n in node_of.items()],
+        local_dim_df(spark, [r[:5] for r in rows], _STATS),
+        local_dim_df(spark, sorted(comp.items()), _ASSIGN),
+        local_dim_df(spark, [(e, n, comp[n]) for e, n in node_of.items()],
                      "entity_id string, node bigint, component bigint"),
-        _local_frame(
+        local_dim_df(
             spark,
             [tuple(min(vote.items(), key=_vote_key)[0] for vote in ballots)
              + (sum(ballots[0].values()),) for ballots in votes.values()],
-            "entity_id string, canonical_name string, kind string, n_mentions bigint"),
+            _NODES),
     )
 
 

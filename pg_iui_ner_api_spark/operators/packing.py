@@ -284,7 +284,7 @@ def temperature_mix(docs: DataFrame, source_col: str = "source",
 
     Scale shape: ONE count aggregation (the only shuffle), a driver
     collect bounded by the number of SOURCES (the linking.py bounded-dim
-    contract), fractions folded into a broadcast VALUES dim, and a
+    contract), fractions folded into a broadcast LocalRelation dim, and a
     map-side join + in-row hash compare. Docs with a NULL source are
     emitted with keep=false (they have no place in a source mix).
     Returns every doc with (keep_frac, keep); ``where(keep)`` is the
@@ -318,7 +318,9 @@ def temperature_mix(docs: DataFrame, source_col: str = "source",
         rs = {r["_src"]: r["n"] ** (alpha - 1.0) for r in counts}
         top = max(rs.values())
         fracs = [(s, v / top) for s, v in rs.items()]
-    dim = F.broadcast(local_dim_df(spark, fracs, ["_src", "_frac"]))
+    src_type = docs.schema[source_col].dataType.simpleString()
+    dim = F.broadcast(
+        local_dim_df(spark, fracs, f"_src {src_type}, _frac double"))
     h = F.conv(
         F.substring(
             F.md5(F.concat_ws("|", F.lit(seed), F.col(id_col).cast("string"))),
@@ -426,7 +428,7 @@ def token_budget_select(
             local_dim_df(
                 spark,
                 [(s, int(b)) for s, b in sorted(budgets.items())],
-                ["_src", "_budget"],
+                "_src string, _budget bigint",
             )
         )
         budgeted = run.join(F.broadcast(offsets), ["pid", "source"]).join(

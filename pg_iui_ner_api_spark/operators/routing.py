@@ -42,7 +42,7 @@ def model_routing_df(spark: SparkSession, registry_df: DataFrame) -> DataFrame:
     from ..synth import local_dim_df
 
     lang_dim = local_dim_df(
-        spark, list(LANG_TO_BASE.items()), ["lang", "base_model"]
+        spark, list(LANG_TO_BASE.items()), "lang string, base_model string"
     )
     return (
         lang_dim.join(registry_df.select("base_model", "file_path"), "base_model")
@@ -57,7 +57,7 @@ def default_routing_df(spark: SparkSession) -> DataFrame:
     return local_dim_df(
         spark,
         [(lang, f"models/{base}") for lang, base in LANG_TO_BASE.items()],
-        ["lang", "model_path"],
+        "lang string, model_path string",
     )
 
 

@@ -40,12 +40,13 @@ from ..schema import LABEL2ID
 
 def label_dim(spark: SparkSession) -> DataFrame:
     """The 9-tag BIO vocabulary as a broadcastable dimension
-    (reference models_utils.py:6-16). Built as a JVM LocalRelation —
-    see synth.local_dim_df for why createDataFrame dims are poison."""
+    (reference models_utils.py:6-16). Built as a JVM LocalRelation from
+    an Arrow table — see synth.local_dim_df for why no dim is a
+    Python-RDD frame."""
     from ..synth import local_dim_df
 
     return local_dim_df(
-        spark, [(k, v) for k, v in LABEL2ID.items()], ["label", "label_id"]
+        spark, [(k, v) for k, v in LABEL2ID.items()], "label string, label_id int"
     )
 
 

@@ -6,13 +6,11 @@ count-based batch flushing (W2, lines 47-50), plus a polling scheduler
 (W3/W4). Their engine equivalents:
 
   * ``stream_extract_mentions`` — the NER hot path as an incremental
-    job: ``readStream`` over the documents table directory, the same
-    mapInPandas extraction operator as batch (operator code is shared —
-    one implementation, two execution modes), ``writeStream`` append.
-    New corpus partitions landing in the directory are processed
-    exactly once per trigger; with ``availableNow`` the job drains the
-    backlog and stops, which is how a 100 TB backfill runs without a
-    separate batch code path.
+    job over the documents table directory, with the same mapInPandas
+    extraction operator as batch (operator code is shared — one
+    implementation, two execution modes). New corpus files landing in
+    the directory are processed exactly once, which is how a 100 TB
+    backfill runs without a separate batch code path.
   * ``stream_windowed_event_counts`` — event-time tumbling window with
     a watermark for late data (W2's time-based twin; the driver
     testdata ``events`` table has real timestamps).
@@ -22,7 +20,12 @@ count-based batch flushing (W2, lines 47-50), plus a polling scheduler
     ``components.canonicalize``, which the compactor calls with the
     state it keeps.
 
-Checkpointing: Spark's own streaming checkpoint (offset log + state
+Every job reads a parquet directory through :func:`_source` and starts
+through :func:`_drain`: the ``availableNow`` trigger processes the files
+not yet in the checkpoint, then the query stops — the run-once trigger
+of Structured Streaming, a streaming query run as a periodic batch job.
+Running the job again (the reference's scheduler tick) picks up the
+files landed since. Spark's own streaming checkpoint (offset log + state
 store) supplies exactly-once per sink; the batch pipeline's lineage
 manifest (plans/lineage.py) is the batch-mode analogue.
 """
@@ -35,34 +38,39 @@ from .. import schema as S
 from ..operators import ner as N
 
 
-def stream_documents(spark: SparkSession, input_dir: str,
-                     max_files_per_trigger: int | None = None) -> DataFrame:
-    """Streaming scan of a documents parquet directory (append table)."""
-    r = spark.readStream.schema(S.DOCUMENTS)
-    if max_files_per_trigger:
-        r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return r.parquet(input_dir)
+_EVENTS = ("event_id long, ts timestamp, user_id long, event_type string, "
+           "value double, props string")
+_TEXT_DOCS = "doc_id long, text string, lang string, source string, n_chars long"
+
+
+def _source(spark: SparkSession, schema, input_dir: str) -> DataFrame:
+    """Streaming scan of the parquet files under ``input_dir`` (an
+    append-only table) as ``schema`` (DDL text or a StructType)."""
+    return spark.readStream.schema(schema).parquet(input_dir)
+
+
+def _drain(stream: DataFrame, checkpoint_dir: str, output_dir: str | None = None,
+           batch=None):
+    """Start ``stream`` with its checkpoint under ``checkpoint_dir``:
+    appended as parquet to ``output_dir``, or handed to ``batch(df,
+    batch_id)`` per micro-batch. The query drains what is there
+    (``availableNow``) and stops; returns the started StreamingQuery."""
+    w = stream.writeStream.option("checkpointLocation", checkpoint_dir)
+    if batch is None:
+        w = w.format("parquet").option("path", output_dir).outputMode("append")
+    else:
+        w = w.foreachBatch(batch)
+    return w.trigger(availableNow=True).start()
 
 
 def stream_extract_mentions(spark: SparkSession, input_dir: str, output_dir: str,
-                            checkpoint_dir: str, available_now: bool = True):
+                            checkpoint_dir: str):
     """documents stream -> mentions parquet, exactly once per file.
 
-    Returns the StreamingQuery; callers awaitTermination (availableNow
-    drains and stops — the backfill/test mode) or leave it running as a
-    continuous ingestion job.
+    Returns the StreamingQuery; callers awaitTermination.
     """
-    docs = stream_documents(spark, input_dir)
-    mentions = N.mentions_of(N.extract(docs))
-    writer = (
-        mentions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    docs = _source(spark, S.DOCUMENTS, input_dir)
+    return _drain(N.mentions_of(N.extract(docs)), checkpoint_dir, output_dir)
 
 
 def stream_windowed_event_counts(events: DataFrame, window: str = "1 hour",
@@ -216,62 +224,25 @@ def run_stream_sessionize(spark: SparkSession, input_dir: str, output_dir: str,
                           watermark: str = "2 hours"):
     """File-source variant: drain the events directory with availableNow;
     re-running with the same checkpoint resumes the per-user state."""
-    ev = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        ).parquet(input_dir)
-    )
-    sessions = stream_sessionize(ev, gap_seconds, watermark)
-    return (
-        sessions.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    ev = _source(spark, _EVENTS, input_dir)
+    return _drain(stream_sessionize(ev, gap_seconds, watermark),
+                  checkpoint_dir, output_dir)
 
 
 def run_windowed_event_counts(spark: SparkSession, input_dir: str, output_dir: str,
                               checkpoint_dir: str):
     """File-source streaming variant over an events parquet directory."""
-    ev = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        ).parquet(input_dir)
-    )
-    counts = stream_windowed_event_counts(ev)
-    return (
-        counts.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    ev = _source(spark, _EVENTS, input_dir)
+    return _drain(stream_windowed_event_counts(ev), checkpoint_dir, output_dir)
 
 
 def run_sliding_event_stats(spark: SparkSession, input_dir: str, output_dir: str,
                             checkpoint_dir: str, window: str = "1 hour",
                             slide: str = "15 minutes"):
     """File-source streaming variant of the sliding-window stats."""
-    ev = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        ).parquet(input_dir)
-    )
-    stats = stream_sliding_event_stats(ev, window=window, slide=slide)
-    return (
-        stats.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    ev = _source(spark, _EVENTS, input_dir)
+    return _drain(stream_sliding_event_stats(ev, window=window, slide=slide),
+                  checkpoint_dir, output_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -292,9 +263,7 @@ def run_sliding_event_stats(spark: SparkSession, input_dir: str, output_dir: str
 
 
 def stream_kg_increment(spark: SparkSession, input_dir: str, workdir: str,
-                        checkpoint_dir: str, alias_df=None, entity_emb_df=None,
-                        available_now: bool = True,
-                        max_files_per_trigger: int | None = None):
+                        checkpoint_dir: str, alias_df=None, entity_emb_df=None):
     """documents stream -> linked mentions + edges, idempotently appended.
 
     foreachBatch (triple assembly's as-of window is not expressible
@@ -328,14 +297,8 @@ def stream_kg_increment(spark: SparkSession, input_dir: str, workdir: str,
         finally:
             runner.unpersist()
 
-    writer = (
-        stream_documents(spark, input_dir, max_files_per_trigger)
-        .writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(_source(spark, S.DOCUMENTS, input_dir), checkpoint_dir,
+                  batch=ingest)
 
 
 def compact_kg_nodes(
@@ -395,19 +358,21 @@ def compact_kg_nodes(
             meta = None
     new_ids = [b for b in batch_ids if meta is None or b > meta["last_batch"]]
     if meta is not None and not new_ids:
-        return spark.read.parquet(f"{workdir}/nodes")
+        return spark.read.schema(C._NODES).parquet(f"{workdir}/nodes")
     if not new_ids:
         raise ValueError(
             f"compact_kg_nodes: no linked batches to compact under "
             f"{inc_dir}; run stream_kg_increment first"
         )
 
-    delta = C.link_stats(spark.read.parquet(
-        *[f"{inc_dir}/batch={b}" for b in new_ids]
-    ))
+    delta = C.link_stats(
+        spark.read.schema("entity_id string, word string, canonical_name string, "
+                          "link_kind string")
+        .parquet(*[f"{inc_dir}/batch={b}" for b in new_ids])
+    )
     prev = None if meta is None else tuple(
-        spark.read.parquet(f"{state_dir}/{name}/v={meta['version']}")
-        for name in state
+        spark.read.schema(ddl).parquet(f"{state_dir}/{name}/v={meta['version']}")
+        for name, ddl in zip(state, (C._STATS, C._ASSIGN))
     )
     stats, assign, _, nodes = C.canonicalize(delta, prev)
 
@@ -426,12 +391,11 @@ def compact_kg_nodes(
                 shutil.rmtree(os.path.join(root, d), ignore_errors=True)
     for d in set(os.listdir(state_dir)) - {*state, "meta.json"}:
         shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
-    return spark.read.parquet(f"{workdir}/nodes")
+    return spark.read.schema(C._NODES).parquet(f"{workdir}/nodes")
 
 
 def stream_dedup_exact(spark: SparkSession, input_dir: str, output_dir: str,
-                       checkpoint_dir: str, available_now: bool = True,
-                       max_files_per_trigger: int | None = None):
+                       checkpoint_dir: str):
     """Streaming exact dedup: continuous-ingest twin of
     ``operators/dedup.dedup_exact`` — only the FIRST document bearing a
     given normalized-content fingerprint is emitted, across micro-batch
@@ -448,27 +412,13 @@ def stream_dedup_exact(spark: SparkSession, input_dir: str, output_dir: str,
     """
     from ..functions.text import fingerprint
 
-    reader = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    docs = reader.parquet(input_dir)
+    docs = _source(spark, _TEXT_DOCS, input_dir)
     deduped = docs.withColumn("fp", fingerprint(F.col("text"))).dropDuplicates(["fp"])
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(deduped, checkpoint_dir, output_dir)
 
 
 def stream_fuse_triples(spark: SparkSession, input_dir: str, workdir: str,
-                        checkpoint_dir: str, available_now: bool = True,
-                        max_files_per_trigger: int | None = None):
+                        checkpoint_dir: str):
     """Continuous knowledge fusion: the streaming twin of
     ``operators/fusion.fuse_triples``.
 
@@ -488,13 +438,6 @@ def stream_fuse_triples(spark: SparkSession, input_dir: str, workdir: str,
       workdir/fuse_partials/batch=<id>/   per-triple partial aggregates
       workdir/fuse_docs/batch=<id>/       per-batch distinct (triple, doc)
     """
-    reader = spark.readStream.schema(
-        "subj string, pred string, obj string, score double, doc_id string"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    triples = reader.parquet(input_dir)
-
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         s = F.least(F.col("score").cast("double"), F.lit(1.0 - 1e-9))
         partials = batch_df.groupBy("subj", "pred", "obj").agg(
@@ -509,13 +452,10 @@ def stream_fuse_triples(spark: SparkSession, input_dir: str, workdir: str,
         docs.write.mode("overwrite").parquet(
             f"{workdir}/fuse_docs/batch={batch_id}")
 
-    writer = (
-        triples.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    triples = _source(
+        spark, "subj string, pred string, obj string, score double, doc_id string",
+        input_dir)
+    return _drain(triples, checkpoint_dir, batch=ingest)
 
 
 def compact_fused_triples(spark: SparkSession, workdir: str) -> DataFrame:
@@ -542,8 +482,7 @@ def compact_fused_triples(spark: SparkSession, workdir: str) -> DataFrame:
 
 
 def stream_token_counts(spark: SparkSession, input_dir: str, workdir: str,
-                        checkpoint_dir: str, available_now: bool = True,
-                        max_files_per_trigger: int | None = None):
+                        checkpoint_dir: str):
     """Continuous heavy-hitters feed: the streaming twin of
     ``operators/sketches.heavy_hitters``.
 
@@ -564,13 +503,6 @@ def stream_token_counts(spark: SparkSession, input_dir: str, workdir: str,
     """
     from ..functions.text import normalize_ws, tokens
 
-    reader = spark.readStream.schema(
-        "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    docs = reader.parquet(input_dir)
-
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         counts = (
             batch_df.select(
@@ -581,13 +513,8 @@ def stream_token_counts(spark: SparkSession, input_dir: str, workdir: str,
         counts.write.mode("overwrite").parquet(
             f"{workdir}/tok_inc/batch={batch_id}")
 
-    writer = (
-        docs.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(_source(spark, _TEXT_DOCS, input_dir), checkpoint_dir,
+                  batch=ingest)
 
 
 def compact_heavy_hitters(spark: SparkSession, workdir: str,
@@ -607,9 +534,7 @@ def compact_heavy_hitters(spark: SparkSession, workdir: str,
 
 
 def stream_dedup_url(spark: SparkSession, input_dir: str, output_dir: str,
-                     checkpoint_dir: str, url_col: str = "url",
-                     available_now: bool = True,
-                     max_files_per_trigger: int | None = None):
+                     checkpoint_dir: str, url_col: str = "url"):
     """Streaming canonical-URL dedup: the continuous-crawl twin of
     ``functions/web.dedup_by_url`` — only the FIRST page bearing a
     given canonical URL is emitted, across micro-batch boundaries
@@ -623,30 +548,16 @@ def stream_dedup_url(spark: SparkSession, input_dir: str, output_dir: str,
     """
     from ..functions.web import canonicalize_url
 
-    reader = spark.readStream.schema(
-        f"doc_id string, {url_col} string, text string"
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    pages = reader.parquet(input_dir)
+    pages = _source(spark, f"doc_id string, {url_col} string, text string",
+                    input_dir)
     deduped = pages.withColumn(
         "canonical_url", canonicalize_url(F.col(url_col))
     ).dropDuplicates(["canonical_url"])
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(deduped, checkpoint_dir, output_dir)
 
 
 def stream_dq_audit(spark: SparkSession, input_dir: str, workdir: str,
-                    checkpoint_dir: str, rules, schema: str,
-                    available_now: bool = True,
-                    max_files_per_trigger: int | None = None):
+                    checkpoint_dir: str, rules, schema: str):
     """Continuous data-quality monitoring: the streaming twin of
     ``operators/audit.check_constraints``.
 
@@ -675,23 +586,12 @@ def stream_dq_audit(spark: SparkSession, input_dir: str, workdir: str,
             f"rules not decomposable over micro-batches: {bad} "
             "(unique/ref quantify across batches — use the batch audit)"
         )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    src = reader.parquet(input_dir)
-
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         res = check_constraints(batch_df, rules).drop("passed")
         res.write.mode("overwrite").parquet(
             f"{workdir}/dq_inc/batch={batch_id}")
 
-    writer = (
-        src.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _drain(_source(spark, schema, input_dir), checkpoint_dir, batch=ingest)
 
 
 def compact_dq_audit(spark: SparkSession, workdir: str) -> DataFrame:

@@ -305,42 +305,40 @@ def synth_truth_triples(spark, n_docs: int, seed: int = 42, partitions: int | No
     return base.mapInPandas(gen, schema="doc_id string, subj string, pred string, obj string")
 
 
-def _sql_lit(v) -> str:
-    """Render a Python value as a SQL literal (strings, numbers, float
-    lists, ``None``). Spark SQL string literals unescape backslashes, so
-    ``\\`` is escaped as well as ``'``."""
-    if v is None:
-        return "NULL"
-    if isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    if isinstance(v, (list, tuple)):
-        return "array(" + ",".join(f"CAST({float(x)!r} AS FLOAT)" for x in v) + ")"
-    if isinstance(v, float):
-        return repr(v) + "D"
-    return str(v)
+def local_dim_df(spark, rows, schema: str):
+    """Small dimension table ``rows`` as a pure-JVM LocalRelation of
+    ``schema`` (DDL, ``"name type, ..."``), built from one Arrow table:
+    no SQL text to parse and analyse, and no Spark job when it is read,
+    also when there are no rows.
 
-
-def local_dim_df(spark, rows, colnames: list[str]):
-    """Small dimension table as a pure-JVM LocalRelation (VALUES literal).
-
-    ``spark.createDataFrame(list)`` builds a Python-RDD-backed plan
-    (applySchemaToPythonRDD) whose every materialization — notably the
-    collect step of a BroadcastExchange — launches Python worker tasks;
-    measured at 30-60 s per broadcast under local mode. A VALUES literal
-    is a LocalRelation: broadcast collect is instant and the dim
-    participates in constant folding. Always use this for dims.
+    No Python-RDD frames: ``spark.createDataFrame(list)`` builds a
+    Python-RDD-backed plan (applySchemaToPythonRDD) whose every
+    materialization — notably the collect step of a BroadcastExchange —
+    launches Python worker tasks; measured at 30-60 s per broadcast
+    under local mode. A ``pyarrow.Table`` gives a LocalRelation:
+    broadcast collect is instant and the dim participates in constant
+    folding. Always use this for dims.
     """
-    values = ",".join("(" + ",".join(_sql_lit(v) for v in r) + ")" for r in rows)
-    cols = ",".join(colnames)
-    return spark.sql(f"SELECT * FROM VALUES {values} AS t({cols})")
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    arrow = to_arrow_schema(DataType.fromDDL(schema))
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(
+        pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(cols, arrow)],
+                             schema=arrow),
+        schema)
 
 
 def alias_df(spark):
     """Small alias dimension — broadcast side of the candidate-gen join (J3)."""
     return local_dim_df(
-        spark, alias_table(), ["alias", "entity_id", "kind", "canonical_name", "prior"]
-    )
+        spark, alias_table(),
+        "alias string, entity_id string, kind string, canonical_name string, "
+        "prior double")
 
 
 def entity_emb_df(spark):
-    return local_dim_df(spark, entity_embeddings(), ["entity_id", "emb"])
+    return local_dim_df(spark, entity_embeddings(),
+                        "entity_id string, emb array<float>")

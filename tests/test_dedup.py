@@ -377,7 +377,7 @@ def test_repeated_spans_basic_and_merge(spark):
             (2, f"pre1 pre2 {shared}"),
             (3, "всё unique here nothing repeats at all"),
         ],
-        ["doc_id", "text"],
+        "doc_id int, text string",
     )
     got = {
         (r["doc_id"], r["tok_start"], r["tok_end"], r["n_grams"])
@@ -396,7 +396,7 @@ def test_repeated_spans_self_repetition_counts(spark):
     df = local_dim_df(
         spark,
         [(1, "a b c xx yy zz a b c")],
-        ["doc_id", "text"],
+        "doc_id int, text string",
     )
     got = sorted(
         (r["tok_start"], r["tok_end"]) for r in repeated_spans(df, k=3).collect()
@@ -426,7 +426,7 @@ def test_repeated_spans_gap_splits_islands(spark):
             (1, "p q r u1 u2 u3 u4 u5 s t v"),
             (2, "p q r x1 x2 x3 x4 x5 s t v"),
         ],
-        ["doc_id", "text"],
+        "doc_id int, text string",
     )
     got = sorted(
         (r["doc_id"], r["tok_start"], r["tok_end"])

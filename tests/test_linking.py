@@ -330,6 +330,8 @@ def test_coherent_linking_duplicate_alias_is_deterministic(spark):
     m.unpersist()
 
 
+_ALIAS_DDL = ("alias string, entity_id string, kind string, "
+              "canonical_name string, prior double")
 _HAND_ALIASES = [
     ("Twin", "E:a", "ORG", "A", 0.5),
     ("Twin", "E:b", "ORG", "B", 0.5),
@@ -351,9 +353,8 @@ def _hand_dims(spark):
     embs = [(e, [1.0, 0.5, 0.0, 0.25])
             for e in sorted({a[1] for a in _HAND_ALIASES})]
     return (
-        synth.local_dim_df(spark, _HAND_ALIASES,
-                           ["alias", "entity_id", "kind", "canonical_name", "prior"]),
-        synth.local_dim_df(spark, embs, ["entity_id", "emb"]),
+        synth.local_dim_df(spark, _HAND_ALIASES, _ALIAS_DDL),
+        synth.local_dim_df(spark, embs, "entity_id string, emb array<float>"),
     )
 
 
@@ -407,13 +408,12 @@ def test_fuzzy_candidates_pick_is_order_independent(spark):
     ]
     words = [(f"m{i}", w, f"ctx {i}")
              for i, w in enumerate(["Acm", "Acme", "Globe", "Acmi", "Acm"] * 4)]
-    cols = ["alias", "entity_id", "kind", "canonical_name", "prior"]
 
     def run(alias_rows, word_rows, n):
         m = spark.createDataFrame(
             word_rows, "mention_id string, word string, ctx string"
         ).repartition(n)
-        out = linking.fuzzy_candidates(m, synth.local_dim_df(spark, alias_rows, cols))
+        out = linking.fuzzy_candidates(m, synth.local_dim_df(spark, alias_rows, _ALIAS_DDL))
         return sorted(out.where(F.col("match_dist") == 1).collect())
 
     one = run(aliases, words, 1)

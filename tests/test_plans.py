@@ -608,12 +608,16 @@ def test_kg_pipeline_job_count(spark, monkeypatch):
 # session) ran this many Spark jobs, the closing count of the read-back
 # nodes included, when the compactor folded its state with Spark jobs.
 FOLDING_COMPACTION_JOBS_DISTRIBUTED = 31
+# Folding on the driver and reading every table with its known schema
+# (no parquet schema-inference job), it runs this many.
+FOLDING_COMPACTION_JOBS = 8
 
 
 def test_folding_compaction_job_count(spark, tmp_path):
     """A compaction that folds a second batch into small state
     canonicalizes on the driver: it runs at most half the jobs of the
-    distributed fold, and its nodes equal the batch pipeline's."""
+    distributed fold, exactly the measured count, and its nodes equal
+    the batch pipeline's."""
     import uuid
 
     from pg_iui_ner_api_spark.plans.pipeline import run_kg_pipeline
@@ -634,6 +638,7 @@ def test_folding_compaction_job_count(spark, tmp_path):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
     assert _jobs_in_group(spark, group) <= FOLDING_COMPACTION_JOBS_DISTRIBUTED // 2
+    assert _jobs_in_group(spark, group) == FOLDING_COMPACTION_JOBS
     res = run_kg_pipeline(spark, docs)
     want = sorted(tuple(r) for r in res["nodes"].collect())
     res["_runner"].unpersist()

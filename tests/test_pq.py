@@ -27,9 +27,7 @@ def _vec_df(spark, vecs):
     from pg_iui_ner_api_spark.synth import local_dim_df
 
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
-    return local_dim_df(spark, rows, ["vec_id", "embedding"]).select(
-        "vec_id", F.col("embedding").cast("array<float>").alias("embedding")
-    )
+    return local_dim_df(spark, rows, "vec_id int, embedding array<float>")
 
 
 def test_pq_exact_when_codebook_covers(spark):

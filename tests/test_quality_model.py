@@ -32,7 +32,7 @@ def _labeled(spark):
     rows = [(i, t, 1) for i, t in enumerate(good)] + [
         (100 + i, t, 0) for i, t in enumerate(spam)
     ]
-    return local_dim_df(spark, rows, ["doc_id", "text", "label"])
+    return local_dim_df(spark, rows, "doc_id int, text string, label int")
 
 
 def test_train_separates_classes(spark):

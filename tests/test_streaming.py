@@ -12,6 +12,17 @@ from pg_iui_ner_api_spark.operators import ner as N
 from pg_iui_ner_api_spark.streaming import jobs as J
 
 
+@pytest.fixture(autouse=True)
+def no_query_left_running(spark):
+    """Every job drains and stops: a query still active after a test is
+    stopped (so it cannot leak into the next test) and fails the test."""
+    yield
+    left = spark.streams.active
+    for q in left:
+        q.stop()
+    assert not left, f"streaming queries left running: {[q.id for q in left]}"
+
+
 def test_stream_extract_matches_batch(spark, tmp_path):
     in_dir = str(tmp_path / "docs")
     out_dir = str(tmp_path / "mentions")

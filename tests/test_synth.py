@@ -1,4 +1,4 @@
-"""``synth.local_dim_df``: a VALUES-literal LocalRelation returns every
+"""``synth.local_dim_df``: an Arrow-built LocalRelation returns every
 cell it is given, whatever the characters or bounds."""
 
 from pg_iui_ner_api_spark.synth import local_dim_df
@@ -14,6 +14,6 @@ def test_local_dim_df_round_trips_cells(spark):
         (None, 2),
         ("\\'", -1),
     ]
-    df = local_dim_df(spark, rows, ["s", "n"])
+    df = local_dim_df(spark, rows, "s string, n bigint")
     assert df.dtypes == [("s", "string"), ("n", "bigint")]
     assert [tuple(r) for r in df.collect()] == rows
